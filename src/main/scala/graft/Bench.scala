@@ -84,9 +84,12 @@ object Bench {
     * by [[appendRunLog]] since round 14). The per-run total breathes with
     * the host's CPU-steal weather; the per-query min across same-code runs
     * is the closest observable to the code's floor, and is the merge the
-    * round-13 verdict prescribed for the official artifact.
+    * round-13 verdict prescribed for the official artifact. Only runs on
+    * the same core count merge: a 32-core floor folded into an 8-core
+    * stamp would report the wider machine's times; entries written before
+    * the `cpus` field existed never merge.
     */
-  private[graft] def sameHeadFloors(head: String, sfDir: String,
+  private[graft] def sameHeadFloors(head: String, sfDir: String, cpus: Int,
                                     path: java.nio.file.Path): (Map[String, Double], Int) = {
     if (!java.nio.file.Files.exists(path)) return (Map.empty, 0)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -101,6 +104,7 @@ object Bench {
         // the official sf0.1 floors (review finding, round 14)
         if (js.hasNonNull("head") && js.get("head").asText() == head &&
             js.hasNonNull("sf") && js.get("sf").asText() == sfDir &&
+            js.hasNonNull("cpus") && js.get("cpus").asInt() == cpus &&
             js.hasNonNull("queries")) {
           runs += 1
           val it = js.get("queries").fields()
@@ -117,7 +121,7 @@ object Bench {
   }
 
   private[graft] def appendRunLog(path: java.nio.file.Path, head: Option[String],
-                                  sfDir: String,
+                                  sfDir: String, cpus: Int,
                                   queries: Seq[(String, Double)], value: Double,
                                   loadIdle: Double, passes: Int,
                                   src: String = "bench-main"): Unit =
@@ -127,6 +131,7 @@ object Bench {
       val entry =
         s"""{"ts":${System.currentTimeMillis() / 1000.0},"src":${jq(src)},""" +
           s""""head":${head.map(jq).getOrElse("null")},"sf":${jq(sfDir)},""" +
+          s""""cpus":$cpus,""" +
           s""""passes":$passes,""" +
           s""""value":${fmt(2, value)},"load_idle":${fmt(2, loadIdle)},""" +
           s""""queries":$qmap}""" + "\n"
@@ -357,10 +362,10 @@ object Bench {
     val runsLog = java.nio.file.Paths.get("BENCH_RUNS.jsonl")
     val head = gitHead()
     val (histFloors, mergedRuns) =
-      head.map(sameHeadFloors(_, sfDir, runsLog))
+      head.map(sameHeadFloors(_, sfDir, cpus.toInt, runsLog))
         .getOrElse((Map.empty[String, Double], 0))
-    appendRunLog(runsLog, head, sfDir, inRunResults, inRunTotal, loadIdle,
-      allPasses.size)
+    appendRunLog(runsLog, head, sfDir, cpus.toInt, inRunResults, inRunTotal,
+      loadIdle, allPasses.size)
     val results =
       if (mergedRuns > 0)
         inRunResults.map { case (k, v) => k -> math.min(v, histFloors.getOrElse(k, v)) }

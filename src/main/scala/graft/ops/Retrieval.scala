@@ -73,8 +73,8 @@ object Retrieval {
     * cross-join) WORSE — it put the stats subtree on the scoring job's
     * critical path; this form keeps the plans untouched and the scores
     * bit-identical, and only re-orders job submission. Returns (n, avgdl,
-    * persisted postings) — [[scoreBm25]] reads the postings from the
-    * cache its own persist call then finds already filled.
+    * persisted postings) — the one pin on the postings: [[scoreBm25]]
+    * reads them from the filled cache and releases it.
     */
   private def overlapStatsWithPostings(statsDf: DataFrame,
                                        tf: DataFrame): (Long, Double, DataFrame) = {
@@ -135,9 +135,10 @@ object Retrieval {
   }
 
   /** Shared scoring tail over a (idCol, dl, token, tf) postings frame.
-    * The frame is persisted: both the df aggregation and the scored
-    * output read it — without the pin Spark recomputes the lineage (no
-    * exchange reuse fires across the two subtrees; measured round 10).
+    * The frame arrives persisted by [[overlapStatsWithPostings]]: both the
+    * df aggregation and the scored output read it — without the pin Spark
+    * recomputes the lineage (no exchange reuse fires across the two
+    * subtrees; measured round 10).
     * Size is bounded by |matching docs| x |terms| — small by retrieval
     * selectivity, same rationale as the other ops' signature pins.
     *
@@ -151,11 +152,9 @@ object Retrieval {
     * plan-invariants suite can keep its join strategy locked even though
     * the returned frame no longer carries it.
     */
-  private def scoreBm25(tfIn: DataFrame, idCol: String, terms: Seq[String],
+  private def scoreBm25(tf: DataFrame, idCol: String, terms: Seq[String],
                         n: Long, avgdl: Double, k1: Double, b: Double,
                         topN: Int, scoreDecimals: Int): DataFrame = {
-    val tf = tfIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     // document frequency per term: |terms| rows -> broadcast
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
 
@@ -181,7 +180,7 @@ object Retrieval {
       .limit(topN)
     // materialize the k-bounded rows and return them as a LocalRelation:
     // self-contained, GC-managed, zero block-manager footprint
-    val spark = tfIn.sparkSession
+    val spark = tf.sparkSession
     val result = spark.createDataFrame(
       java.util.Arrays.asList(lazyResult.collect(): _*), lazyResult.schema)
     tf.unpersist()

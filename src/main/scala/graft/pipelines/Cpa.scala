@@ -2,6 +2,8 @@ package graft.pipelines
 
 import java.time.LocalDate
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +20,8 @@ import graft.ops._
   *
   * The mid-pipeline min-date check is an action (one extra Spark job on the
   * pre-filter plan), matching the reference's eager min() — the unioned input
-  * is cached around it when `validate` is on.
+  * is cached around it when `validate` is on, and handed to the caller in
+  * [[Result.cachedInput]] to release (dropped here if the check aborts).
   */
 object Cpa {
 
@@ -26,12 +29,17 @@ object Cpa {
                            overtime: DataFrame, teM: DataFrame)
 
   /** Structured result: the output plus the reference's print-only check
-    * results, surfaced as data (SURVEY §2.10).
+    * results, surfaced as data (SURVEY §2.10). `cachedInput` is the BW+MN
+    * union pinned for the staleness check when `validate` is on; the
+    * caller [[release]]s it once it has run its actions on the output.
     */
   final case class Result(output: DataFrame,
                           schemaIssues: Seq[Validate.SchemaIssue],
                           invalidTsOrgCode: DataFrame,
-                          invalidDeptTsOrg: DataFrame)
+                          invalidDeptTsOrg: DataFrame,
+                          cachedInput: Option[DataFrame] = None) {
+    def release(): Unit = cachedInput.foreach(_.unpersist(blocking = true))
+  }
 
   /** Expected 34-column raw layout, order-sensitive (reference :521-532). */
   val expectedColumns: Seq[String] = Seq(
@@ -74,10 +82,11 @@ object Cpa {
 
     // --- fiscal window + staleness abort (reference :495-518) ---
     val (fyStart, fyEnd) = Temporal.calendarFiscalYearBounds(runDate)
-    if (validate) {
-      val minDate = combined.agg(min(col("TRAN_CREATE_DT"))).collect().head.getTimestamp(0)
-      if (minDate != null) Temporal.requireFresh(minDate, fyStart)
-    }
+    if (validate)
+      try {
+        val minDate = combined.agg(min(col("TRAN_CREATE_DT"))).collect().head.getTimestamp(0)
+        if (minDate != null) Temporal.requireFresh(minDate, fyStart)
+      } catch { case NonFatal(e) => combined.unpersist(); throw e }
     val inFy = combined.filter(
       Temporal.betweenDates(col("TRAN_CREATE_DT"), fyStart, fyEnd))
 
@@ -167,6 +176,7 @@ object Cpa {
     // --- final rename + 20-column projection (reference :711-741) ---
     val renamed = Reshape.renameAll(withCollege, finalRenames)
     Result(Reshape.selectExisting(renamed, finalColumns),
-      schemaIssues, invalidOrg, invalidDept)
+      schemaIssues, invalidOrg, invalidDept,
+      cachedInput = if (validate) Some(combined) else None)
   }
 }

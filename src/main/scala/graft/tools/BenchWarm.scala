@@ -40,7 +40,8 @@ object BenchWarm {
       try java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
       catch { case scala.util.control.NonFatal(_) => -1.0 }
-    val spark = LocalSession(cores = 32, logLevel = "ERROR")
+    val cores = 32
+    val spark = LocalSession(cores = cores, logLevel = "ERROR")
 
     val e = graft.io.Sources.table(spark, sfDir, "embeddings")
     val ids = (0 until 16).map(_ * 31L)
@@ -91,10 +92,10 @@ object BenchWarm {
     val runsLog = java.nio.file.Paths.get("BENCH_WARM_RUNS.jsonl")
     val head = graft.Bench.gitHead()
     val (hist, mergedRuns) = head
-      .map(h => graft.Bench.sameHeadFloors(h, sfDir, runsLog))
+      .map(h => graft.Bench.sameHeadFloors(h, sfDir, cores, runsLog))
       .getOrElse((Map.empty[String, Double], 0))
-    graft.Bench.appendRunLog(runsLog, head, sfDir, rows, rows.map(_._2).sum,
-      loadIdle, passes, src = "bench-warm")
+    graft.Bench.appendRunLog(runsLog, head, sfDir, cores, rows,
+      rows.map(_._2).sum, loadIdle, passes, src = "bench-warm")
     val merged = rows.map { case (n, s) =>
       n -> math.min(s, hist.getOrElse(n, s)) }
 

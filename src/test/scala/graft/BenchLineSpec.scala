@@ -116,17 +116,17 @@ class BenchLineSpec extends AnyFlatSpec with Matchers {
       val headA = "a" * 40
       val headB = "b" * 40
       val sf01 = "/root/testdata/sf0.1"
-      Bench.appendRunLog(tmp, Some(headA), sf01,
+      Bench.appendRunLog(tmp, Some(headA), sf01, 32,
         Seq("q1" -> 1.5, "q2" -> 0.8), 2.3, 1.0, 3)
-      Bench.appendRunLog(tmp, Some(headA), sf01,
+      Bench.appendRunLog(tmp, Some(headA), sf01, 32,
         Seq("q1" -> 1.2, "q2" -> 0.9, "q3" -> 4.0), 6.1, 0.5, 3)
-      Bench.appendRunLog(tmp, Some(headB), sf01, Seq("q1" -> 0.1), 0.1, 0.5, 3)
-      Bench.appendRunLog(tmp, None, sf01, Seq("q1" -> 0.01), 0.01, 0.5, 3) // dirty
+      Bench.appendRunLog(tmp, Some(headB), sf01, 32, Seq("q1" -> 0.1), 0.1, 0.5, 3)
+      Bench.appendRunLog(tmp, None, sf01, 32, Seq("q1" -> 0.01), 0.01, 0.5, 3) // dirty
       // same code, DIFFERENT scale factor: its ~10x-smaller floors must
       // never fold into the sf0.1 merge (review finding, round 14)
-      Bench.appendRunLog(tmp, Some(headA), "/root/testdata/sf0.01",
+      Bench.appendRunLog(tmp, Some(headA), "/root/testdata/sf0.01", 32,
         Seq("q1" -> 0.05, "q2" -> 0.04), 0.09, 0.5, 3)
-      val (floors, runs) = Bench.sameHeadFloors(headA, sf01, tmp)
+      val (floors, runs) = Bench.sameHeadFloors(headA, sf01, 32, tmp)
       runs shouldBe 2
       floors("q1") shouldBe 1.2 +- 1e-6
       floors("q2") shouldBe 0.8 +- 1e-6
@@ -135,11 +135,36 @@ class BenchLineSpec extends AnyFlatSpec with Matchers {
       java.nio.file.Files.write(tmp,
         "{\"ts\": 1.0, \"run\": 0, \"line\": \"{}\"}\nnot json at all\n".getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.APPEND)
-      val (floors2, runs2) = Bench.sameHeadFloors(headA, sf01, tmp)
+      val (floors2, runs2) = Bench.sameHeadFloors(headA, sf01, 32, tmp)
       runs2 shouldBe 2
       floors2 shouldBe floors
-      Bench.sameHeadFloors("c" * 40, sf01, tmp)._2 shouldBe 0
-      Bench.sameHeadFloors(headA, "/root/testdata/sf0.01", tmp)._2 shouldBe 1
+      Bench.sameHeadFloors("c" * 40, sf01, 32, tmp)._2 shouldBe 0
+      Bench.sameHeadFloors(headA, "/root/testdata/sf0.01", 32, tmp)._2 shouldBe 1
+    } finally java.nio.file.Files.deleteIfExists(tmp)
+  }
+
+  it should "merge only entries recorded on the same core count" in {
+    val tmp = java.nio.file.Files.createTempFile("bench_runs", ".jsonl")
+    try {
+      val head = "a" * 40
+      val sf01 = "/root/testdata/sf0.1"
+      Bench.appendRunLog(tmp, Some(head), sf01, 8,
+        Seq("q1" -> 2.0, "q2" -> 1.0), 3.0, 1.0, 3)
+      Bench.appendRunLog(tmp, Some(head), sf01, 32,
+        Seq("q1" -> 0.5, "q2" -> 0.4), 0.9, 1.0, 3)
+      // an entry from before the cpus field: it names no core count
+      java.nio.file.Files.write(tmp,
+        ("{\"head\":\"" + head + "\",\"sf\":\"" + sf01 +
+          "\",\"queries\":{\"q1\":0.1}}\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.APPEND)
+      val (c8, c8Runs) = Bench.sameHeadFloors(head, sf01, 8, tmp)
+      c8Runs shouldBe 1
+      c8("q1") shouldBe 2.0 +- 1e-6
+      c8("q2") shouldBe 1.0 +- 1e-6
+      val (c32, c32Runs) = Bench.sameHeadFloors(head, sf01, 32, tmp)
+      c32Runs shouldBe 1
+      c32("q1") shouldBe 0.5 +- 1e-6
+      Bench.sameHeadFloors(head, sf01, 4, tmp)._2 shouldBe 0
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 

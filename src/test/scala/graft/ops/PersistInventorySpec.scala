@@ -22,8 +22,6 @@ import org.scalatest.matchers.should.Matchers
   *    generation retirement; file must call `unpersist`).
   *  - `serving`  — a deliberately long-lived served-index pin with an
   *    explicit swap/release path (file must call `unpersist`).
-  *  - `runScoped` — a driver-boundary pipeline program whose cache dies
-  *    with the run's JVM (file must live under `pipelines/`).
   *  - `helper` — the shared conditional-persist gate
   *    ([[Managed.ensurePersisted]]): persists only when the plan is not
   *    already cached; the pin's lifecycle belongs to the CALLING site.
@@ -37,7 +35,6 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
   private val Managed = "managed"
   private val Released = "released"
   private val Serving = "serving"
-  private val RunScoped = "runScoped"
   private val Helper = "helper"
 
   /** file (relative to src/main/scala/graft) -> (pin-site count, class). */
@@ -46,11 +43,10 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
     "ops/Hits.scala" -> (4, Managed), // hitsManaged: graph frames + iterates
     "ops/PageRank.scala" -> (5, Managed), // pageRank/trustRankManaged
     "ops/Profiler.scala" -> (1, Released), // rank-select scratch, read twice
-    // round 20: overlapStatsWithPostings pins the postings frame before
-    // filling it concurrently with the stats job; scoreBm25's own persist
-    // call then ALIASES the same plan (CacheManager dedups), and its
-    // existing unpersist releases the one shared entry.
-    "ops/Retrieval.scala" -> (2, Released), // BM25 tf table, freed post-topN
+    // overlapStatsWithPostings pins the postings frame before filling it
+    // concurrently with the stats job; scoreBm25 reads that one pin and
+    // releases it.
+    "ops/Retrieval.scala" -> (1, Released), // BM25 tf table, freed post-topN
     // round 15: the warm-path pins (Sampling prefix-sum scratch, SemDedup
     // assignment, SpanDedup occurrences, TextDedup ppjoin/simhash
     // signatures) route through Managed.ensurePersisted — persist only
@@ -64,9 +60,11 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
     "ops/TextRank.scala" -> (2, Managed), // keywordsManaged: ids + edges
     "pipelines/CorpusPrepStream.scala" -> (1, Released), // per-batch transient
     "pipelines/CorpusStore.scala" -> (1, Serving), // served index, swap frees
-    "pipelines/Cpa.scala" -> (1, RunScoped), // validate-mode union reuse
-    // (round 14: Runner's one-run catalog cache left with the Storage-trait
-    // refactor — the listing is a driver-side Seq now, nothing to pin)
+    // validate-mode union reuse: handed back in Cpa.Result.cachedInput and
+    // released by Runner.run once the outputs are written (dropped in-body
+    // when the staleness check aborts)
+    "pipelines/Cpa.scala" -> (1, Released),
+    "pipelines/Runner.scala" -> (1, Released), // one output pin per CSV+XLSX sink pair
     "streaming/LshStream.scala" -> (2, Serving) // served LSH index, swap frees
   )
 
@@ -114,7 +112,6 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
         cls match {
           case Managed => text should include("new Managed(")
           case Released | Serving => text should include("unpersist")
-          case RunScoped => f should startWith("pipelines/")
           case Helper =>
             // the conditional-persist gate: must probe the public cache
             // state and persist ONLY when absent — lifecycle stays owned

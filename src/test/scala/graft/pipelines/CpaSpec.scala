@@ -120,7 +120,10 @@ class CpaSpec extends SparkSpec {
   it should "abort on stale data (V3) when validation is on" in {
     val stale = toDf(Seq(
       row("900", "T9", "2024-06-01", "", "1", "1", "602000", "CA", "X-Y", "3 - Apply", "BW")))
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     an[IllegalArgumentException] should be thrownBy
       Cpa.run(stale, mn, lookups, runDate, Seq(col("TRAN_ID")))
+    // the abort drops the union pin the check filled, leaving none behind
+    spark.sparkContext.getPersistentRDDs.keySet.toSet shouldBe pinned
   }
 }

@@ -161,4 +161,74 @@ class RunnerSpec extends SparkSpec {
       withClue(s"${s.name}: ") { viaTrait shouldBe viaDf }
     }
   }
+
+  // ---- compute-once contract: one read per input, one materialization per
+  // output for both sinks, no cache left behind ----
+
+  /** The fixture as bytes behind [[graft.io.Storage.InMemory]], counting
+    * every fetch per entry path.
+    */
+  private final class CountingStorage extends graft.io.Storage {
+    private val inner = new graft.io.Storage.InMemory(
+      new java.io.File(root).listFiles().filter(_.isFile).map { f =>
+        s"drive/payroll/${f.getName}" -> Files.readAllBytes(f.toPath)
+      }.toMap)
+    val fetches = scala.collection.mutable.Map.empty[String, Int]
+    override def list(): Seq[graft.io.Storage.Entry] = inner.list()
+    override def fetch(e: graft.io.Storage.Entry): String = synchronized {
+      fetches(e.path) = fetches.getOrElse(e.path, 0) + 1
+      inner.fetch(e)
+    }
+  }
+
+  private val runDate = LocalDate.of(2026, 8, 12)
+
+  it should "leave no cache behind after a run with outputs" in {
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = Files.createTempDirectory("graft_runner_once").toString
+    val r = Runner.run(spark, root, Some(out), runDate,
+      dedupOrder = Seq(col("UIN")))
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    spark.sparkContext.getPersistentRDDs.keySet.toSet shouldBe rddsBefore
+    // the returned frames are lazy plans: running them pins nothing either
+    r.pua.get.collect()
+    r.cpa.get.output.collect()
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    spark.sparkContext.getPersistentRDDs.keySet.toSet shouldBe rddsBefore
+  }
+
+  it should "write the same rows to the stamped CSV and XLSX as the returned frames" in {
+    val stamp = "08122026"
+    def typed(df: org.apache.spark.sql.DataFrame,
+              like: org.apache.spark.sql.DataFrame) =
+      df.select(like.schema.fields.toIndexedSeq.map(f =>
+        col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
+    Seq("PreTAM_PUA" -> result.pua.get,
+        "CPA_Final" -> result.cpa.get.output).foreach { case (name, expected) =>
+      withClue(s"$name: ") {
+        val csv = spark.read.option("header", "true")
+          .csv(s"$outDir/${name}_$stamp")
+        val xlsx = graft.io.Xlsx.read(spark, s"$outDir/${name}_$stamp.xlsx")
+        csv.columns.toSeq shouldBe expected.columns.toSeq
+        xlsx.columns.toSeq shouldBe expected.columns.toSeq
+        val want = rows(expected)
+        want should not be empty
+        rows(typed(csv, expected)) shouldBe want
+        rows(typed(xlsx, expected)) shouldBe want
+      }
+    }
+  }
+
+  it should "fetch each picked input exactly once per run" in {
+    val storage = new CountingStorage
+    val r = Runner.run(spark, storage,
+      outDir = Some(Files.createTempDirectory("graft_runner_fetch").toString),
+      runDate, dedupOrder = Seq(col("UIN")), validate = true)
+    val picked = r.loadSummary.filter(s => s.found && s.used).flatMap(_.path)
+    picked should have size 7
+    storage.fetches.toMap shouldBe picked.map(_ -> 1).toMap
+  }
 }
