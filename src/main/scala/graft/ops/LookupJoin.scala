@@ -9,10 +9,18 @@ import org.apache.spark.sql.functions._
   * lookup table (reference etl_payroll_pipeline_demo.py:289-308,:598-658), with
   * a warn-only row-count fan-out guard (`safe_merge_left`, :233-240).
   *
-  * Scale posture (SURVEY §4.2): dims get an explicit `broadcast()` hint; at
-  * 100 TB fact scale, AQE demotes to sort-merge automatically when a dim
-  * outgrows `spark.sql.autoBroadcastJoinThreshold`, with no code change here.
-  * The fact side is never shuffled by these joins.
+  * Scale posture (SURVEY §4.2): with `hint = true` (the default) the dim
+  * gets an explicit `broadcast()` hint, which Spark honours whatever the
+  * dim's size (up to its hard broadcast limit) —
+  * `spark.sql.autoBroadcastJoinThreshold` does not apply to a hinted side,
+  * and AQE does not demote it to sort-merge. A hinted dim is
+  * therefore collected whole to the driver, and its dedup runs inside that
+  * broadcast job as ONE task (`coalesce(1)` ahead of the aggregate: a
+  * single partition already satisfies the aggregate's distribution, so no
+  * exchange and no extra job is planned). A dim too large for one task is
+  * too large to broadcast: pass `hint = false` for a planner-chosen join
+  * (shuffled dedup, sort-merge when the dim outgrows the threshold). The
+  * fact side is never shuffled by the hinted joins.
   */
 object LookupJoin {
 
@@ -26,12 +34,15 @@ object LookupJoin {
     val projected = if (dimCols.isEmpty) dim else dim.select((keys ++ dimCols).distinct.map(col): _*)
     // dimUnique: the caller KNOWS the dim is key-unique (a primary-keyed
     // dimension table) — the defensive dropDuplicates is then a no-op
-    // semantically but costs a full hash exchange + two aggregate passes
-    // on the broadcast-build path (round-20: two of q_pipeline_pretam's
-    // ten serialized stage waves). Knowledge the optimizer doesn't have,
+    // semantically but costs aggregate passes and, hinted, funnels the
+    // dim's scan into one task (unhinted, a full hash exchange; round 20,
+    // when the hinted dedup still shuffled: two of q_pipeline_pretam's ten
+    // serialized stage waves). Knowledge the optimizer doesn't have,
     // guide §8; the oracle replay proves result equality.
-    val deduped = if (dimUnique) projected else projected.dropDuplicates()
-    fact.join(if (hint) broadcast(deduped) else deduped, keys, "left")
+    val dimSide =
+      if (!dimUnique) dedupDim(projected, hint)
+      else if (hint) broadcast(projected) else projected
+    fact.join(dimSide, keys, "left")
   }
 
   /** Asymmetric-key variant (J3/J6: `left_on != right_on`, reference
@@ -41,10 +52,17 @@ object LookupJoin {
     */
   def lookupLeftOn(fact: DataFrame, dim: DataFrame, cond: Column,
                    dropRight: Seq[String] = Nil, hint: Boolean = true): DataFrame = {
-    val deduped = dim.dropDuplicates()
-    val joined = fact.join(if (hint) broadcast(deduped) else deduped, cond, "left")
+    val joined = fact.join(dedupDim(dim, hint), cond, "left")
     dropRight.foldLeft(joined)(_.drop(_))
   }
+
+  /** The deduplicated dim side of a lookup. Hinted: deduped in one
+    * partition and broadcast, so the broadcast job does the dedup with no
+    * exchange (see the object doc). Unhinted: a plain `dropDuplicates`,
+    * planned like any aggregate.
+    */
+  private def dedupDim(dim: DataFrame, hint: Boolean): DataFrame =
+    if (hint) broadcast(dim.coalesce(1).dropDuplicates()) else dim.dropDuplicates()
 
   /** Post-join fallback (J3: `fillna(Department Name)`, reference
     * etl_payroll_pipeline_demo.py:297-302): prefer the dim's value, fall back

@@ -262,6 +262,10 @@ object PageRank {
                       dampingPct: Int, seeds: Option[DataFrame]): Ctx = {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
+    // every pin below goes through ensurePersisted: the unmanaged entry
+    // points leave their pins alive, so a later run over the same edges
+    // (pageRank then trustRank, or the same seeds again) finds the graph
+    // frames already cached and aliases them (see Managed.ensurePersisted)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
@@ -275,7 +279,7 @@ object PageRank {
       allNodes.join(s.withColumn("is_seed", lit(true)).hint("shuffle_hash"),
         Seq("node"), "left")
         .select(col("node"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-    }.persist(lvl)
+    }.transform(Managed.ensurePersisted(_, lvl))
     // |V| and |receiving set| from ONE aggregate job over the nodes pin
     // (round 11: these were two separate count() jobs — at tiny per-job
     // cost × five graph queries the scheduling overhead was measurable;
@@ -291,7 +295,7 @@ object PageRank {
     // re-derives the whole edge pipeline per round — invisible when
     // edges is a parquet scan, a large tax when it is a derived frame
     // (TextRank's explode+join+distinct edge pipeline)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od")).persist(lvl)
+    val outdeg = Managed.ensurePersisted(e.groupBy("src").agg(count(lit(1)).as("od")), lvl)
     val small = nNodes <= BroadcastNodesMax
     // (src, dst, od) pinned once — every iteration reads it. In the
     // BROADCAST regime the rank side of the edge join broadcasts, so the
@@ -302,12 +306,12 @@ object PageRank {
     // the shuffled regime iterations join BY SRC, so dst-partitioning
     // would force a re-exchange per round — left as-is there.
     val eodBase = e.join(outdeg, "src")
-    val eod = (if (small && DstPartition) eodBase.repartition(col("dst"))
-               else eodBase).persist(lvl)
+    val eod = Managed.ensurePersisted(
+      if (small && DstPartition) eodBase.repartition(col("dst")) else eodBase, lvl)
     val r0 = nodes
       .select(col("node"), col("is_seed"),
         when(col("is_seed"), lit(Scale / nRecv)).otherwise(lit(0L)).as("rank"))
-      .persist(lvl)
+      .transform(Managed.ensurePersisted(_, lvl))
     // dangling detection, once: graphs whose every node emits edges (the
     // common case — symmetric graphs can't dangle at all) skip the
     // per-round redistribution broadcast stage entirely; dang_sum is

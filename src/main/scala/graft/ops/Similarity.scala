@@ -257,9 +257,11 @@ object Similarity {
                             maxBucket: Int = Blocking.Auto): Managed = {
     val planes = hyperplanes(nbits, dim)
     // persisted so the signature isn't re-inlined into both join sides
+    // (aliasing the pin an earlier unmanaged call over the same input left)
     val v = Partitioning.spread(df).select(col(idCol), col(vecCol).as("__v"))
       .withColumn("__bucket", lshSignature(col("__v"), planes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Managed.ensurePersisted(_,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // auto resolves via one preflight agg (Blocking.resolveAutoCap); a
     // healthy corpus runs the exact uncapped plan
     val eff =

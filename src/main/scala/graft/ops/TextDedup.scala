@@ -334,9 +334,11 @@ object TextDedup {
     // the bucket explode AND both sides of the candidate join (measured 37×
     // slowdown at sf0.1). This is the standard LSH "materialize the
     // signature table" step; MEMORY_AND_DISK spills instead of OOMing at
-    // scale.
+    // scale. An earlier unmanaged call over the same input left its pin:
+    // alias it (Managed.ensurePersisted).
     val prepared = minhashPrepare(df, idCol, textCol, shingleN, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Managed.ensurePersisted(_,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val pairs = minhashPairsFromPrepared(prepared, idCol, bands, rowsPerBand,
       threshold, maxBucket)
     new Managed(pairs, Seq(prepared))
@@ -425,7 +427,8 @@ object TextDedup {
       }
     }
     val delta = minhashPrepare(newDocs, idCol, textCol, shingleN, bands * rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Managed.ensurePersisted(_,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val db = lshBuckets(delta, idCol, "__sig", bands, rowsPerBand)
     val cb = corpusBuckets.getOrElse(
       lshBuckets(corpus.select(col(idCol), col("__sig")), idCol, "__sig",

@@ -15,8 +15,10 @@ import graft.ops._
   * reference's ONLY hard failure, :507-512) → fiscal-year filter → schema
   * check → derived codes + format validation → four lookup joins (org, dept,
   * TE-row, overtime-composite) → mode-mapped Time Entry → ACTION filter →
-  * dedups (full row, UIN Job, TRAN_ID) → int-normalize all columns → date
-  * re-coercion → college split → 20-column rename projection.
+  * keep-first per UIN Job → int-normalize all columns → date re-coercion →
+  * keep-first per TRAN_ID (the reference's full-row dedup ahead of each
+  * keyed one is subsumed, see [[dedupNormalize]]) → college split →
+  * 20-column rename projection.
   *
   * The mid-pipeline min-date check is an action (one extra Spark job on the
   * pre-filter plan), matching the reference's eager min() — the unioned input
@@ -126,16 +128,11 @@ object Cpa {
     val withTe = LookupJoin.lookupLeft(withDept, teRow, keys = Seq("UIN Job"))
 
     // Time Entry from per-code mode of the lookup (reference :617-650)
-    val te = lookups.teM
-      .select(Normalize.ensureString(col("TE M")).as("TE M"),
-        Normalize.ensureString(col("Time Entry Method")).as("Time Entry Method"))
-      .filter(col("TE M").isNotNull && col("Time Entry Method").isNotNull)
-    val teModes = ModeMap.modePerKey(te, "TE M", "Time Entry Method", modeCol = "__te_mode")
-      .select(col("TE M").as("__te_key"), col("__te_mode"))
+    val teModes = TimeEntryModes(lookups.teM)
 
     val withTeKey = withTe.withColumn("TE M", trim(Normalize.astypeStr(col("TE M"))))
     val withTimeEntry = withTeKey
-      .join(broadcast(teModes), withTeKey("TE M") === teModes("__te_key"), "left")
+      .join(teModes, withTeKey("TE M") === teModes("__te_key"), "left")
       .withColumn("Time Entry", col("__te_mode"))
       .drop("__te_key", "__te_mode")
 
@@ -151,21 +148,9 @@ object Cpa {
         dropRight = Seq("Job Eclass", "Pay ID"))
       .withColumnRenamed("Job Detail E-Class Long Desc", "E-Class Description")
 
-    // --- filter + dedups (reference :666-668) ---
+    // --- filter + dedups + int-normalize (reference :666-695) ---
     val applied = withOt.filter(col("ACTION") === "3 - Apply")
-    val noFullDups = Dedup.fullRow(applied)
-    val byUinJob = Dedup.keepFirst(noFullDups, Seq("UIN Job"), dedupOrder)
-
-    // --- int-normalize every column (reference :673-682) ---
-    val normalized = byUinJob.select(byUinJob.columns.map(c =>
-      Normalize.stripDecimalNan(col(c)).as(c)): _*)
-
-    // --- date re-coercion (+ null counts V6 available via Validate.nullCount)
-    val redated = normalized
-      .withColumn("TRAN_CREATE_DT", Temporal.coerceTimestamp(col("TRAN_CREATE_DT")))
-      .withColumn("TRAN_CLOSED_DT", Temporal.coerceTimestamp(col("TRAN_CLOSED_DT")))
-
-    val deduped = Dedup.keepFirst(Dedup.fullRow(redated), Seq("TRAN_ID"), dedupOrder)
+    val deduped = dedupNormalize(applied, dedupOrder)
 
     // --- college split (reference :698-706, the Python row loop, vectorized) ---
     val (ccode, cname) = Derive.splitOnce(Normalize.astypeStr(col("COLLEGE")), "-")
@@ -178,5 +163,33 @@ object Cpa {
     Result(Reshape.selectExisting(renamed, finalColumns),
       schemaIssues, invalidOrg, invalidDept,
       cachedInput = if (validate) Some(combined) else None)
+  }
+
+  /** The dedup segment (reference :666-695): keep-first per `UIN Job` →
+    * int-normalize every column → re-coerce the two dates → keep-first per
+    * `TRAN_ID`.
+    *
+    * The reference also drops full-row duplicates right before each keyed
+    * dedup (:667, :693). Both are subsumed: identical rows share every key,
+    * so keep-first per key already keeps only one of them, with the same
+    * values whichever wins the order; and removing an identical copy never
+    * changes which distinct row comes first. The same holds for pandas'
+    * `drop_duplicates(keep="first")`. Leaving them out saves two of the
+    * four serial fact shuffles.
+    */
+  private[pipelines] def dedupNormalize(applied: DataFrame,
+                                        dedupOrder: Seq[Column]): DataFrame = {
+    val byUinJob = Dedup.keepFirst(applied, Seq("UIN Job"), dedupOrder)
+
+    // --- int-normalize every column (reference :673-682) ---
+    val normalized = byUinJob.select(byUinJob.columns.map(c =>
+      Normalize.stripDecimalNan(col(c)).as(c)): _*)
+
+    // --- date re-coercion (+ null counts V6 available via Validate.nullCount)
+    val redated = normalized
+      .withColumn("TRAN_CREATE_DT", Temporal.coerceTimestamp(col("TRAN_CREATE_DT")))
+      .withColumn("TRAN_CLOSED_DT", Temporal.coerceTimestamp(col("TRAN_CLOSED_DT")))
+
+    Dedup.keepFirst(redated, Seq("TRAN_ID"), dedupOrder)
   }
 }

@@ -14,9 +14,9 @@ import graft.ops._
   * default fill → ordered PreTAM projection → header harmonization.
   *
   * Catalyst collapses the long rename/projection chain into a single codegen
-  * stage; the three dims broadcast; the only exchanges are the mode aggregate
-  * (bounded by |distinct TE M|) and the dedup window shuffle on the business
-  * key (SURVEY §3.2, §4.2).
+  * stage; the three dims and the TE mode map broadcast, each deduped or
+  * aggregated inside its own broadcast job; the only exchange is the dedup
+  * window shuffle on the business key (SURVEY §3.2, §4.2).
   *
   * Determinism: pandas keeps the FIRST duplicate in incidental frame order
   * (reference :339-343); the engine demands an explicit `dedupOrder`
@@ -116,20 +116,14 @@ object Pua {
       .withColumnRenamed("Overtime FLSA", "Overtime")
 
     // --- Time Entry via per-code mode (reference :310-324) ---
-    val te = lookups.teM
-      .select(Normalize.ensureString(col("TE M")).as("TE M"),
-        Normalize.ensureString(col("Time Entry Method")).as("Time Entry Method"))
-      .filter(col("TE M").isNotNull && col("Time Entry Method").isNotNull)
-    val teModes = ModeMap.modePerKey(te, "TE M", "Time Entry Method", modeCol = "__te_mode")
-      .select(col("TE M").as("__te_key"), col("__te_mode"))
-
+    val teModes = TimeEntryModes(lookups.teM)
     val withTeKey = withOt.withColumn("TE M", trim(Normalize.astypeStr(col("TE M"))))
     val hasTimeEntry = withTeKey.columns.contains("Time Entry")
     val withExisting =
       if (hasTimeEntry) withTeKey.withColumn("Time Entry", Normalize.ensureString(col("Time Entry")))
       else withTeKey.withColumn("Time Entry", lit(null).cast("string"))
     val withTimeEntry = withExisting
-      .join(broadcast(teModes), withExisting("TE M") === teModes("__te_key"), "left")
+      .join(teModes, withExisting("TE M") === teModes("__te_key"), "left")
       .withColumn("Time Entry",
         when(col("Time Entry").isNotNull && col("Time Entry") =!= "", col("Time Entry"))
           .otherwise(col("__te_mode")))

@@ -51,7 +51,8 @@ object Runner {
 
   /** All-string headered ingest — deterministic (no inference); the
     * pipelines stringify everything anyway, like the reference's astype
-    * passes. Dispatches on extension: CSV (Spark reader), .xlsx
+    * passes. Dispatches on extension: CSV ([[graft.io.Csv]]: the header is
+    * read on the driver, so ingest starts no Spark job), .xlsx
     * ([[graft.io.Xlsx]]) and legacy .xls ([[graft.io.Xls]], BIFF8 —
     * round 16) all land as the same all-string frame, so the reference's
     * mixed Excel/CSV storage roots ingest without a pre-conversion step.
@@ -60,13 +61,12 @@ object Runner {
     val lower = path.toLowerCase
     // the Excel readers are driver-side java.nio/ZipFile consumers: strip
     // the file: scheme Storage.fetch staging returns (CSV goes through
-    // Spark's Hadoop reader, which takes the URI as-is)
+    // Hadoop's FileSystem and Spark's reader, which take the URI as-is)
     def localPath: String =
       if (lower.startsWith("file:")) new java.net.URI(path).getPath else path
     if (lower.endsWith(".xlsx")) graft.io.Xlsx.read(spark, localPath)
     else if (lower.endsWith(".xls")) graft.io.Xls.read(spark, localPath)
-    else spark.read.option("header", "true")
-      .option("inferSchema", "false").csv(path)
+    else graft.io.Csv.read(spark, path)
   }
 
   final case class RunResult(loadSummary: Seq[LoadStatus],

@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Spec-locked cache-lifecycle inventory: EVERY `.persist(` / `.cache()`
-  * call site in non-probe main source must appear in the whitelist below
-  * with a lifecycle classification, and each classification carries a
+/** Spec-locked cache-lifecycle inventory: EVERY `.persist(` / `.cache()` /
+  * `ensurePersisted(` call site in non-probe main source must appear in the
+  * whitelist below with a lifecycle classification, and each carries a
   * structural invariant the file must satisfy. Adding a pin anywhere —
   * new file or new site in a known file — fails this spec until the author
   * classifies it here, making an unmanaged session-lifetime pin (the
@@ -52,12 +52,18 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
     // signatures) route through Managed.ensurePersisted — persist only
     // when the plan is not already cached, so a re-invocation ALIASES
     // silently instead of logging the CacheManager re-persist WARN
-    // (CacheAliasingSpec locks the benignity). Their lifecycle class is
-    // unchanged (managed handles still release them).
+    // (CacheAliasingSpec locks the benignity); so do PageRank's graph
+    // frames, the LSH signature table and the minhash prepare/delta pins,
+    // which later runs over the same input alias the same way. Their
+    // lifecycle class is unchanged (managed handles still release them).
     "ops/Managed.scala" -> (1, Helper), // ensurePersisted, the shared gate
+    "ops/Sampling.scala" -> (2, Managed), // prefix-sum scratch
+    "ops/SemDedup.scala" -> (2, Managed), // cluster assignment, batch
     "ops/Similarity.scala" -> (1, Managed), // LSH signature table
-    "ops/TextDedup.scala" -> (2, Managed), // minhash prepare + increment delta
-    "ops/TextRank.scala" -> (2, Managed), // keywordsManaged: ids + edges
+    "ops/SpanDedup.scala" -> (1, Managed), // span occurrences
+    // minhash prepare + increment delta, ppjoin prefixes, simhash signatures
+    "ops/TextDedup.scala" -> (5, Managed),
+    "ops/TextRank.scala" -> (3, Managed), // keywordsManaged: pair counts, ids + edges
     "pipelines/CorpusPrepStream.scala" -> (1, Released), // per-batch transient
     "pipelines/CorpusStore.scala" -> (1, Serving), // served index, swap frees
     // validate-mode union reuse: handed back in Cpa.Result.cachedInput and
@@ -69,7 +75,7 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
   )
 
   private val root = Paths.get("src/main/scala/graft")
-  private val pinSite = raw"(\.persist\(|\.cache\(\))".r
+  private val pinSite = raw"(\.persist\(|\.cache\(\)|ensurePersisted\()".r
 
   private def sources: Seq[java.nio.file.Path] = {
     val s = Files.walk(root)

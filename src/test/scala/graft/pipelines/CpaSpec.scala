@@ -2,9 +2,10 @@ package graft.pipelines
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ops.{Dedup, Normalize, Temporal}
 
 /** Golden end-to-end test of the CPA pipeline over FIXTURES.md A2/A3-shaped
   * fixtures: union, FY filter, staleness abort, nan-nan derived codes, format
@@ -125,5 +126,39 @@ class CpaSpec extends SparkSpec {
       Cpa.run(stale, mn, lookups, runDate, Seq(col("TRAN_ID")))
     // the abort drops the union pin the check filled, leaving none behind
     spark.sparkContext.getPersistentRDDs.keySet.toSet shouldBe pinned
+  }
+
+  "Cpa.dedupNormalize" should "equal the reference's composition with its full-row dedups" in {
+    // the reference form: full-row dedup ahead of each keyed keep-first
+    // (reference :667-668, :693-695)
+    def reference(applied: DataFrame, order: Seq[Column]): DataFrame = {
+      val byUinJob = Dedup.keepFirst(applied.distinct(), Seq("UIN Job"), order)
+      val normalized = byUinJob.select(byUinJob.columns.map(c =>
+        Normalize.stripDecimalNan(col(c)).as(c)): _*)
+      val redated = normalized
+        .withColumn("TRAN_CREATE_DT", Temporal.coerceTimestamp(col("TRAN_CREATE_DT")))
+        .withColumn("TRAN_CLOSED_DT", Temporal.coerceTimestamp(col("TRAN_CLOSED_DT")))
+      Dedup.keepFirst(redated.distinct(), Seq("TRAN_ID"), order)
+    }
+    def appliedRow(uin: String, tran: String, job: String) =
+      row(uin, tran, "2025-09-01", "2025-09-02", job, "1", "602000", "CA",
+        "KL-Engineering", "3 - Apply", "BW")
+    // shaped like the pipeline's input to the dedups: UIN Job derived
+    // before the int-normalize pass, the create date already coerced
+    val applied = toDf(Seq(
+        appliedRow("100", "T1", "101"), appliedRow("100", "T1", "101"), // raw full duplicates
+        appliedRow("100", "T2", "101"),       // UIN-Job collision, differs only in TRAN_ID
+        appliedRow("400", "T5", "201.0"),     // identical to the next row only after
+        appliedRow("400", "T5", "201"),       // stripDecimalNan ("201.0" vs "201")
+        appliedRow("500", "T5", "301"),       // TRAN_ID collision after normalize
+        appliedRow("600", "T7", "601.0")))
+      .withColumn("UIN Job", concat_ws("-", col("UIN"), col("JOB")))
+      .withColumn("TRAN_CREATE_DT", Temporal.coerceTimestamp(col("TRAN_CREATE_DT")))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
+    // an order that ranks every distinct row, so both forms are deterministic
+    val order = Seq(col("TRAN_ID"), col("UIN"), col("JOB"))
+    val got = rows(Cpa.dedupNormalize(applied, order))
+    got shouldBe rows(reference(applied, order))
+    got.map(r => (r(0), r(5))) shouldBe Seq(("100", "T1"), ("400", "T5"), ("600", "T7"))
   }
 }

@@ -3,8 +3,13 @@ package graft.pipelines
 import java.nio.file.Files
 import java.time.LocalDate
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 
 /** End-to-end Runner spec: a temp storage root with reference-shaped CSVs →
   * discovery → pick → both pipelines → stamped outputs + V1 load summary.
@@ -12,6 +17,9 @@ import graft.SparkSpec
 class RunnerSpec extends SparkSpec {
 
   import spark.implicits._
+
+  /** Spark jobs in one [[Runner.run]] with outputs over this fixture. */
+  private val RunnerJobBudget = 22
 
   private def write(dir: java.io.File, name: String, lines: Seq[String]): Unit =
     Files.writeString(new java.io.File(dir, name).toPath, lines.mkString("\n"))
@@ -230,5 +238,53 @@ class RunnerSpec extends SparkSpec {
     val picked = r.loadSummary.filter(s => s.found && s.used).flatMap(_.path)
     picked should have size 7
     storage.fetches.toMap shouldBe picked.map(_ -> 1).toMap
+  }
+
+  // ---- job budget: the Spark jobs one run with outputs schedules ----
+
+  it should "run one Runner.run with outputs within its Spark job budget" in {
+    // listing + staleness check + the two outputs' sinks: the CSV headers
+    // are read on the driver, every hinted dim is deduped inside its
+    // broadcast job, and CPA keeps only its two keyed dedup shuffles
+    val dir = root
+    val (_, jobs) = JobCounter(spark) {
+      Runner.run(spark, dir, Some(Files.createTempDirectory("graft_runner_jobs").toString),
+        runDate, dedupOrder = Seq(col("UIN")))
+    }
+    jobs should be <= RunnerJobBudget
+  }
+
+  /** Every node of an executed plan, through the adaptive wrapper, its
+    * query stages and reused exchanges.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedExchangeExec => nodes(r.child)
+    case _ => p.children.flatMap(nodes)
+  })
+
+  private def finalPlan(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
+
+  it should "dedup every broadcast dim without a shuffle and shuffle CPA's facts only on its two keys" in {
+    val r = Runner.run(spark, root, None, runDate, dedupOrder = Seq(col("UIN")))
+    val pua = finalPlan(r.pua.get)
+    val cpa = finalPlan(r.cpa.get.output)
+    Seq("PUA" -> pua, "CPA" -> cpa).foreach { case (name, plan) =>
+      withClue(s"$name: ") {
+        val builds = plan.collect { case b: BroadcastExchangeExec => b }
+        builds should not be empty
+        builds.flatMap(b => nodes(b.child)).collect { case s: ShuffleExchangeExec => s } shouldBe empty
+      }
+    }
+    val shuffleKeys = cpa.collect { case s: ShuffleExchangeExec => s }.distinct
+      .map(_.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case other => Seq(other.toString)
+      })
+    shuffleKeys should contain theSameElementsAs Seq(Seq("UIN Job"), Seq("TRAN_ID"))
   }
 }
