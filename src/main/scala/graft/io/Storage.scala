@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Remote-storage adapter boundary — the S1 seam. The reference
@@ -52,20 +53,47 @@ object Storage {
       .sortBy(_.path).headOption
   }
 
-  /** Any Hadoop-visible filesystem rooted at `root`: list via the same
-    * binaryFile metadata scan as [[Sources.catalog]] (footers/listings
-    * only, content never read), fetch in place (Spark reads the original
-    * path — no staging copy).
+  /** Any Hadoop-visible filesystem rooted at `root` (a directory path, not
+    * a glob): list by walking the Hadoop `FileSystem` on the driver with the
+    * session's Hadoop conf — no Spark job — and return exactly the files the
+    * [[Sources.catalog]] scan returns; fetch in place (Spark reads the
+    * original path — no staging copy).
+    *
+    * Spark's file index skips a hidden name at every level of the walk
+    * (`_*` unless it contains `=`, `.*`, `*._COPYING_`; `_metadata*` and
+    * `_common_metadata*` are kept), and its scan then keeps only non-empty
+    * data files, which drops every `_*` and `.*` file name even where the
+    * walk kept it.
     */
   final class LocalFs(spark: SparkSession, root: String) extends Storage {
-    override def list(): Seq[Entry] =
-      Sources.catalog(spark, root)
-        .select("file_name", "path", "size", "modified_at")
-        .collect()
-        .map(r => Entry(r.getString(0), r.getString(1), r.getLong(2),
-          r.getTimestamp(3).getTime))
-        .toSeq
+    override def list(): Seq[Entry] = {
+      val rootPath = new Path(root)
+      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+      def walk(dir: Path): Seq[FileStatus] =
+        fs.listStatus(dir).toSeq
+          .filterNot(s => LocalFs.hidden(s.getPath.getName))
+          .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+      walk(fs.makeQualified(rootPath))
+        .filter(s => s.getLen > 0 && LocalFs.dataFile(s.getPath.getName))
+        .map { s =>
+          val path = s.getPath.toString
+          Entry(path.substring(path.lastIndexOf('/') + 1), path, s.getLen,
+            s.getModificationTime)
+        }
+    }
     override def fetch(entry: Entry): String = entry.path
+  }
+
+  private object LocalFs {
+    /** Spark's `HadoopFSUtils.shouldFilterOutPathName`. */
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+
+    /** Spark's `PartitioningAwareFileIndex.isDataPath`. */
+    def dataFile(name: String): Boolean =
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith("."))
   }
 
   /** In-memory double: `files` maps relative paths to raw bytes; fetch

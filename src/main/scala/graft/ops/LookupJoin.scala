@@ -76,15 +76,13 @@ object LookupJoin {
     * list duplicates). The corpus-curation shape: keep only documents on a
     * vetted source/id list.
     *
-    * Scale posture: same as [[lookupLeft]] — the list is deduped, projected
-    * to the keys, and broadcast; the fact side never shuffles. AQE demotes
-    * to a shuffled semi join if the list outgrows the broadcast threshold.
+    * Scale posture: same as [[lookupLeft]] — the list is projected to the
+    * keys and deduped like a dim (hinted: inside its broadcast job, no
+    * exchange); the fact side never shuffles.
     */
   def semiJoin(fact: DataFrame, list: DataFrame, keys: Seq[String],
-               hint: Boolean = true): DataFrame = {
-    val k = list.select(keys.map(col): _*).dropDuplicates()
-    fact.join(if (hint) broadcast(k) else k, keys, "left_semi")
-  }
+               hint: Boolean = true): DataFrame =
+    fact.join(dedupDim(list.select(keys.map(col): _*), hint), keys, "left_semi")
 
   /** Blocklist filter: drop fact rows whose `keys` appear in `list` (LEFT
     * ANTI). The other half of corpus curation: remove documents whose
@@ -94,10 +92,8 @@ object LookupJoin {
     * predicate; the oracle form is NOT EXISTS).
     */
   def antiJoin(fact: DataFrame, list: DataFrame, keys: Seq[String],
-               hint: Boolean = true): DataFrame = {
-    val k = list.select(keys.map(col): _*).dropDuplicates()
-    fact.join(if (hint) broadcast(k) else k, keys, "left_anti")
-  }
+               hint: Boolean = true): DataFrame =
+    fact.join(dedupDim(list.select(keys.map(col): _*), hint), keys, "left_anti")
 
   /** Dim keys that would fan out a left join (J1 guard, reference
     * etl_payroll_pipeline_demo.py:233-240). Cheaper than the reference's

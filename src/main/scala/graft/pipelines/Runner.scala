@@ -14,9 +14,10 @@ import graft.io.{Sinks, Sources, Storage}
   *
   * Differences by design (SURVEY §7.5/§7.6): storage is any Hadoop-visible
   * filesystem instead of Box (S1 is an I/O adapter, not a query operator);
-  * Excel inputs arrive pre-converted to CSV at the adapter boundary; the
-  * first-match pick orders by path explicitly instead of relying on listing
-  * order; the run date is injected.
+  * the first-match pick orders by path explicitly instead of relying on
+  * listing order; the run date is injected; and the two pipelines, which
+  * the reference runs one after the other, run at the same time (see
+  * [[run]]) — they share only the four lookups, read once up front.
   */
 object Runner {
 
@@ -91,12 +92,23 @@ object Runner {
     * for the trait: a SaaS connector implements list/fetch and this
     * composition is unchanged.
     *
-    * Compute-once contract: each picked input is fetched and read once and
-    * shared by PUA and CPA; with `outDir` set, each pipeline output is
-    * materialized once and that one materialization feeds both its CSV and
-    * its XLSX sink. No cache outlives the call — the sink pins and CPA's
-    * staleness-check pin are released before it returns, so the frames in
-    * the [[RunResult]] are lazy plans over the ingested inputs.
+    * Compute-once contract: each picked input is fetched and read once, and
+    * the four lookups are shared by PUA and CPA; with `outDir` set, each
+    * pipeline output is materialized once and that one materialization
+    * feeds both its CSV and its XLSX sink.
+    *
+    * Overlap contract: the lookups and the two certification inputs are
+    * read on the calling thread (header reads, no Spark job). The PUA
+    * branch — workbook ingest, [[Pua.run]], its two sinks — then runs on a
+    * thread created for this call, so it inherits the caller's Spark local
+    * properties (job group, job tags, scheduler pool), while the caller runs
+    * the CPA branch — [[Cpa.run]] with its staleness job, its two sinks.
+    * Both branches always run to the end: a CPA staleness abort still
+    * leaves the PUA outputs written. The call returns or throws only after
+    * both have finished; when both fail, PUA's exception is thrown with
+    * CPA's attached as suppressed. No cache outlives the call either way —
+    * the sink pins and CPA's staleness-check pin are released first, so the
+    * frames in the [[RunResult]] are lazy plans over the ingested inputs.
     */
   def run(spark: SparkSession, storage: Storage, outDir: Option[String],
           runDate: LocalDate, dedupOrder: Seq[Column],
@@ -108,30 +120,19 @@ object Runner {
       LoadStatus(s.name, picked(s.name).isDefined, picked(s.name).map(_.path),
         s.used))
 
-    // one fetch and one read per picked input: the four lookups feed both
-    // pipelines, and each pipeline's plan reuses the same ingested frame
-    val loaded = scala.collection.mutable.Map.empty[String, Option[DataFrame]]
     def load(name: String): Option[DataFrame] =
-      loaded.getOrElseUpdate(name,
-        picked(name).map(e => readAny(spark, storage.fetch(e))))
-
-    val puaOut = for {
-      pua <- load("pua"); tsOrg <- load("ts_org"); tsDept <- load("ts_dept")
-      ot <- load("overtime"); teM <- load("te_m")
-    } yield Pua.run(pua, Pua.Lookups(tsOrg, tsDept, ot, teM), dedupOrder)
-
-    val cpaOut = for {
-      bw <- load("cert_bw"); mn <- load("cert_mn")
+      picked(name).map(e => readAny(spark, storage.fetch(e)))
+    val lookups = for {
       tsOrg <- load("ts_org"); tsDept <- load("ts_dept")
       ot <- load("overtime"); teM <- load("te_m")
-    } yield Cpa.run(bw, mn, Cpa.Lookups(tsOrg, tsDept, ot, teM),
-      runDate, dedupOrder, validate)
+    } yield (tsOrg, tsDept, ot, teM)
+    val certs = for (bw <- load("cert_bw"); mn <- load("cert_mn")) yield (bw, mn)
 
     // the reference computes each dataset once and writes that one frame as
     // CSV + XLSX (S5 + S6, :438-439): the output is persisted for its two
     // sinks and released after them (both sinks already require dim-scale
     // outputs: coalesce(1) and a driver collect)
-    def sink(df: DataFrame, dir: String, prefix: String): Unit = {
+    def sink(df: DataFrame, prefix: String): Unit = outDir.foreach { dir =>
       val out = df.persist()
       try {
         Sinks.singleCsv(out,
@@ -139,11 +140,40 @@ object Runner {
         graft.io.Xlsx.write(out, s"$dir/${Sinks.stampedName(prefix, runDate, "xlsx")}")
       } finally out.unpersist(blocking = true)
     }
-    try outDir.foreach { dir =>
-      new java.io.File(dir).mkdirs()
-      puaOut.foreach(sink(_, dir, "PreTAM_PUA"))
-      cpaOut.foreach(r => sink(r.output, dir, "CPA_Final"))
-    } finally cpaOut.foreach(_.release())
-    RunResult(summary, puaOut, cpaOut)
+    outDir.foreach(new java.io.File(_).mkdirs())
+
+    var puaOutcome: Either[Throwable, Option[DataFrame]] = null
+    val puaBranch = new Thread(() => puaOutcome = attempt {
+      for {
+        (tsOrg, tsDept, ot, teM) <- lookups; pua <- load("pua")
+      } yield {
+        val out = Pua.run(pua, Pua.Lookups(tsOrg, tsDept, ot, teM), dedupOrder)
+        sink(out, "PreTAM_PUA")
+        out
+      }
+    }, "graft-runner-pua")
+    puaBranch.setDaemon(true)
+    puaBranch.start()
+
+    val cpaOutcome = attempt {
+      val cpa = for {
+        (tsOrg, tsDept, ot, teM) <- lookups; (bw, mn) <- certs
+      } yield Cpa.run(bw, mn, Cpa.Lookups(tsOrg, tsDept, ot, teM),
+        runDate, dedupOrder, validate)
+      try cpa.foreach(r => sink(r.output, "CPA_Final"))
+      finally cpa.foreach(_.release())
+      cpa
+    }
+    puaBranch.join()
+
+    (puaOutcome, cpaOutcome) match {
+      case (Right(pua), Right(cpa)) => RunResult(summary, pua, cpa)
+      case (Left(pua), Left(cpa)) => pua.addSuppressed(cpa); throw pua
+      case (Left(pua), _) => throw pua
+      case (_, Left(cpa)) => throw cpa
+    }
   }
+
+  private def attempt[T](body: => T): Either[Throwable, T] =
+    try Right(body) catch { case e: Throwable => Left(e) }
 }

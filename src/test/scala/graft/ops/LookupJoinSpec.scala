@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import graft.ExecutedPlan.nodes
 import graft.SparkSpec
 
 class LookupJoinSpec extends SparkSpec {
@@ -54,6 +56,44 @@ class LookupJoinSpec extends SparkSpec {
     // anti-join keeps them (the NOT EXISTS semantics the oracle mirrors)
     out.orderBy("k").select("v").as[String].collect().toSet shouldBe
       Set("y", "nullkey")
+  }
+
+  "semiJoin and antiJoin" should "dedup a hinted list inside its broadcast job with the old rows" in {
+    val f = Seq((Some(1), "a"), (Some(2), "b"), (Some(3), "c"), (None, "n"))
+      .toDF("k", "v")
+    // three input partitions, so the old form's dedup needs an exchange
+    val list = spark.sparkContext.parallelize(Seq((Some(1), "x"), (Some(1), "y"),
+      (None, "z"), (None, "z"), (Some(4), "w")), 3).toDF("k", "junk")
+    // the previous form: a planned dropDuplicates under the hint
+    def old(how: String) =
+      f.join(broadcast(list.select("k").dropDuplicates()), Seq("k"), how)
+    Seq("left_semi" -> LookupJoin.semiJoin(f, list, Seq("k")),
+        "left_anti" -> LookupJoin.antiJoin(f, list, Seq("k"))).foreach {
+      case (how, got) => withClue(s"$how: ") {
+        got.collect().map(_.toSeq).toSet shouldBe old(how).collect().map(_.toSeq).toSet
+        val plan = nodes(got.queryExecution.executedPlan)
+        val builds = plan.collect { case b: BroadcastExchangeExec => b }
+        builds should not be empty
+        builds.flatMap(b => nodes(b.child))
+          .collect { case s: ShuffleExchangeExec => s } shouldBe empty
+      }
+    }
+    LookupJoin.semiJoin(f, list, Seq("k")).select("v").as[String].collect() shouldBe Array("a")
+    LookupJoin.antiJoin(f, list, Seq("k")).select("v").as[String].collect().toSet shouldBe
+      Set("b", "c", "n")
+  }
+
+  it should "keep a planned dedup for an unhinted list" in {
+    val f = fact
+    val list = Seq(1, 1, 3).toDF("k")
+    Seq("left_semi" -> LookupJoin.semiJoin(f, list, Seq("k"), hint = false),
+        "left_anti" -> LookupJoin.antiJoin(f, list, Seq("k"), hint = false)).foreach {
+      case (how, got) => withClue(s"$how: ") {
+        val old = f.join(list.select("k").dropDuplicates(), Seq("k"), how)
+        got.queryExecution.optimizedPlan
+          .sameResult(old.queryExecution.optimizedPlan) shouldBe true
+      }
+    }
   }
 
   "keyViolations" should "report keys that would fan out a left join" in {

@@ -6,10 +6,10 @@ import java.time.LocalDate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.{JobCounter, SparkSpec}
+import graft.ExecutedPlan.nodes
 
 /** End-to-end Runner spec: a temp storage root with reference-shaped CSVs →
   * discovery → pick → both pipelines → stamped outputs + V1 load summary.
@@ -19,7 +19,7 @@ class RunnerSpec extends SparkSpec {
   import spark.implicits._
 
   /** Spark jobs in one [[Runner.run]] with outputs over this fixture. */
-  private val RunnerJobBudget = 22
+  private val RunnerJobBudget = 21
 
   private def write(dir: java.io.File, name: String, lines: Seq[String]): Unit =
     Files.writeString(new java.io.File(dir, name).toPath, lines.mkString("\n"))
@@ -243,26 +243,103 @@ class RunnerSpec extends SparkSpec {
   // ---- job budget: the Spark jobs one run with outputs schedules ----
 
   it should "run one Runner.run with outputs within its Spark job budget" in {
-    // listing + staleness check + the two outputs' sinks: the CSV headers
-    // are read on the driver, every hinted dim is deduped inside its
-    // broadcast job, and CPA keeps only its two keyed dedup shuffles
+    // staleness check + the two outputs' sinks: the listing walks the
+    // filesystem on the driver, the CSV headers are read on the driver,
+    // every hinted dim is deduped inside its broadcast job, and CPA keeps
+    // only its two keyed dedup shuffles
     val dir = root
-    val (_, jobs) = JobCounter(spark) {
+    val (_, tagged, all) = JobCounter.withAll(spark) {
       Runner.run(spark, dir, Some(Files.createTempDirectory("graft_runner_jobs").toString),
         runDate, dedupOrder = Seq(col("UIN")))
     }
-    jobs should be <= RunnerJobBudget
+    tagged should be <= RunnerJobBudget
+    // the PUA branch's thread inherits the caller's local properties, so
+    // every job of the run carries the caller's job tag
+    all shouldBe tagged
   }
 
-  /** Every node of an executed plan, through the adaptive wrapper, its
-    * query stages and reused exchanges.
+  // ---- overlap contract: both branches run to the end, the run throws
+  // only after both, and nothing stays cached ----
+
+  /** The fixture's files in a new root, with `replace` swapping some out
+    * (name -> bytes; the old name is dropped when the new one differs).
     */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => nodes(q.plan)
-    case r: ReusedExchangeExec => nodes(r.child)
-    case _ => p.children.flatMap(nodes)
-  })
+  private def rootWith(replace: (String, String, Array[Byte])*): String = {
+    val dir = Files.createTempDirectory("graft_runner_variant").toFile
+    val dropped = replace.map(_._1).toSet
+    new java.io.File(root).listFiles().filter(f => f.isFile && !dropped(f.getName))
+      .foreach(f => Files.copy(f.toPath, new java.io.File(dir, f.getName).toPath))
+    replace.foreach { case (_, name, bytes) =>
+      Files.write(new java.io.File(dir, name).toPath, bytes)
+    }
+    dir.getAbsolutePath
+  }
+
+  private def staleBw: (String, String, Array[Byte]) = {
+    val lines = Files.readAllLines(new java.io.File(root, "cert_BW_2026.csv").toPath)
+    ("cert_BW_2026.csv", "cert_BW_2026.csv",
+      (lines.get(0) + "\n" + lines.get(1).replace("2025-09-01", "2024-06-01"))
+        .getBytes("UTF-8"))
+  }
+
+  private val staleMessage = "requirement failed: stale input: min date " +
+    "2024-06-01 00:00:00.0 predates fiscal-year floor 2024-07-01 00:00:00.0"
+
+  private val unreadablePua =
+    ("monthly_PUA_file.csv", "monthly_PUA_file.xlsx", "not a workbook".getBytes("UTF-8"))
+
+  private def assertNothingCached(rddsBefore: Set[Int]): Unit = {
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    spark.sparkContext.getPersistentRDDs.keySet.toSet shouldBe rddsBefore
+  }
+
+  it should "write both PUA outputs and rethrow the CPA staleness abort unchanged" in {
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = Files.createTempDirectory("graft_runner_stale").toString
+    val e = intercept[IllegalArgumentException] {
+      Runner.run(spark, rootWith(staleBw), Some(out), runDate,
+        dedupOrder = Seq(col("UIN")))
+    }
+    e.getMessage shouldBe staleMessage
+    e.getSuppressed shouldBe empty
+    new java.io.File(s"$out/PreTAM_PUA_08122026").isDirectory shouldBe true
+    new java.io.File(s"$out/PreTAM_PUA_08122026.xlsx").isFile shouldBe true
+    new java.io.File(s"$out/CPA_Final_08122026").exists() shouldBe false
+    assertNothingCached(rddsBefore)
+  }
+
+  it should "rethrow an unreadable PUA workbook after the CPA branch has finished and released its union" in {
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = Files.createTempDirectory("graft_runner_badpua").toString
+    val e = intercept[Exception] {
+      Runner.run(spark, rootWith(unreadablePua), Some(out), runDate,
+        dedupOrder = Seq(col("UIN")))
+    }
+    e.getSuppressed shouldBe empty
+    new java.io.File(s"$out/CPA_Final_08122026").isDirectory shouldBe true
+    new java.io.File(s"$out/CPA_Final_08122026.xlsx").isFile shouldBe true
+    new java.io.File(s"$out/PreTAM_PUA_08122026").exists() shouldBe false
+    assertNothingCached(rddsBefore)
+  }
+
+  it should "throw PUA's exception with CPA's suppressed when both branches fail" in {
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val puaOnly = intercept[Exception] {
+      Runner.run(spark, rootWith(unreadablePua), None, runDate,
+        dedupOrder = Seq(col("UIN")))
+    }
+    val e = intercept[Exception] {
+      Runner.run(spark, rootWith(unreadablePua, staleBw), None, runDate,
+        dedupOrder = Seq(col("UIN")))
+    }
+    e.getClass shouldBe puaOnly.getClass
+    e.getMessage shouldBe puaOnly.getMessage
+    e.getSuppressed.toSeq.map(_.getMessage) shouldBe Seq(staleMessage)
+    assertNothingCached(rddsBefore)
+  }
 
   private def finalPlan(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
