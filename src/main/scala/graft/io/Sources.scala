@@ -17,7 +17,8 @@ object Sources {
     *
     * The resolved relation is memoized PER (session, path) — the catalog
     * behaviour `spark.table` gives over a metastore, hand-rolled for bare
-    * paths. Measured round-20 (tools/ReadCostProbe): every
+    * paths. Measured round-20 (OPTIMIZATION_r20.md, "Table resolution
+    * memo"): every
     * `spark.read.parquet` costs ~90 ms of warm driver time (footer
     * schema read + relation construction), and the 142-query registry
     * re-resolved each table on every query build of every bench pass —

@@ -55,10 +55,10 @@ import org.apache.spark.sql.functions._
   * but by the same token the pile holds most of the member mass, far over
   * the few-percent share any healthy block has. The floor keeps auto a
   * guaranteed no-op on small/well-behaved corpora (every oracle corpus's
-  * max block is ≤ 45 — measured, BucketProbe/SCALE.md), so default-on
-  * auto preserves the exact uncapped pair set there — and, because auto
-  * resolves via a preflight job ([[resolveAutoCap]]), the healthy-corpus
-  * plan is bit-identical to uncapped (zero plan overhead).
+  * max block is ≤ 45 — measured, SCALE.md "Auto hot-bucket cap"), so
+  * default-on auto preserves the exact uncapped pair set there — and,
+  * because auto resolves via a preflight job ([[resolveAutoCap]]), the
+  * healthy-corpus plan is bit-identical to uncapped (zero plan overhead).
   */
 object Blocking {
 
@@ -93,8 +93,8 @@ object Blocking {
   /** Auto-cap floor: blocks at or below this size are never capped. 256²
     * within-block candidate rows ≈ 65k — trivial to verify — while the
     * pile-ups the guard exists for are 10⁴–10⁶ members. Measured
-    * (BucketProbe, SCALE.md round 8): minhash 16×4 bucket max is 3 at
-    * sf0.01 / 4 at sf0.1 — two orders below the floor.
+    * (SCALE.md round 8, "Auto hot-bucket cap"): minhash 16×4 bucket max
+    * is 3 at sf0.01 / 4 at sf0.1 — two orders below the floor.
     */
   val AutoFloor: Long = 256L
 
@@ -241,12 +241,13 @@ object Blocking {
       // unpruned one (star/rep branches), so member rows cross the wire
       // at most TWICE — down from the round-8 chain, and with zero
       // planner-inserted block-key shuffles (spec-locked). Measured
-      // (SkewBench A/B, SCALE.md round 9): 32k/128k piles 16.4/17.4 →
-      // 13.2/12.9 s. Output is the exact pair set of the round-8 shape
-      // (BlockingSpec equality), and the healthy-corpus branch above is
-      // untouched. Per-block skew note: repartitioning by block key puts
-      // an oversized block in one partition — the same funnel the
-      // round-8 star join already forced, paid once instead of thrice.
+      // (SCALE.md round 9, "Capped-path shuffle diet"): 32k/128k piles
+      // 16.4/17.4 → 13.2/12.9 s. Output is the exact pair set of the
+      // round-8 shape (BlockingSpec equality), and the healthy-corpus
+      // branch above is untouched. Per-block skew note: repartitioning by
+      // block key puts an oversized block in one partition — the same
+      // funnel the round-8 star join already forced, paid once instead of
+      // thrice.
       import org.apache.spark.sql.expressions.Window
       val wBlock = Window.partitionBy(bc: _*)
       val wGroup = Window.partitionBy(bc :+ col(groupKeyCol): _*)

@@ -139,9 +139,10 @@ object NgramLm {
     // from cb (sum-of-counts identity, tried round-20): the four corpus
     // passes are INDEPENDENT AQE stages submitted in one concurrent wave,
     // while deriving serializes cl/cr/n behind cb's materialization —
-    // measured 0.66 -> 0.93 s, jobs 9 -> 12 (same-window PlanPhaseProbe
-    // A/B). The parallel-redundant form stays the local optimum here, the
-    // same wave-vs-work verdict as the round-19 spread rejection above.
+    // measured 0.66 -> 0.93 s, jobs 9 -> 12 (same-window A/B,
+    // OPTIMIZATION_r20.md "NgramLm marginal derivation"). The
+    // parallel-redundant form stays the local optimum here, the same
+    // wave-vs-work verdict as the round-19 spread rejection above.
     // (avgLogProb keeps the derived form: its wall was flat and it drops
     // a corpus-scale tokenize pass — the 100 TB-side of the trade.)
     val cl = big.groupBy("w1").agg(count(lit(1)).as("n_left"))

@@ -99,7 +99,8 @@ object Packing {
     * where the bin state carries across micro-batches. Docs longer than
     * `budget` get a sequence to themselves.
     *
-    * Measured on the sf0.01 documents corpus (tools/PackUtil, 512-token
+    * Measured on the sf0.01 documents corpus (the probe is in git at
+    * ac4574e; 512-token
     * budget, per-lang shards): offset packing fills 98.3% of sequence
     * capacity, greedy 89.9% — the ~8-point under-fill is the price of
     * never splitting a document across sequences.

@@ -47,19 +47,16 @@ object PageRank {
     * under the threshold each iteration runs ONE exchange (the contrib
     * groupBy) with every join map-side, instead of three.
     *
-    * Default 64k nodes (~1.5 MB of unsafe rows): `tools/GraphBroadcastProbe`
-    * measured the regimes tied at 50k and shuffled WINNING from 150k up on
-    * local[32] — per-iteration broadcast pays a driver collect + hashed-
-    * relation build × joins × rounds, which outgrows the (network-free
-    * local) shuffle quickly. On a network-attached cluster the crossover
-    * sits higher; the threshold is an operational knob, not a constant of
-    * nature: `-Dgraft.graph.broadcastNodesMax=N` (0 forces the shuffled
-    * path everywhere — also how the probe times both regimes on one graph
-    * in one JVM); read per prepare(), not cached.
+    * 64k nodes (~1.5 MB of unsafe rows): measured on one 3-regular graph
+    * in one JVM, the regimes tied at 50k nodes and shuffled WON from 150k
+    * up on local[32] (3.36 vs 3.42 s at 50k, 5.01 vs 4.48 s at 150k) —
+    * per-iteration broadcast pays a driver collect + hashed-relation build
+    * × joins × rounds, which outgrows the (network-free local) shuffle
+    * quickly. On a network-attached cluster the crossover sits higher
+    * (SCALE.md, "Graph-iteration broadcast siding"; the probe that
+    * measured it is in git at ac4574e).
     */
-  def BroadcastNodesMax: Long =
-    sys.props.get("graft.graph.broadcastNodesMax").map(_.toLong)
-      .getOrElse(1L << 16)
+  val BroadcastNodesMax: Long = 1L << 16
 
   /** Lineage-truncation cadence for the iteration loop, dangling-aware.
     * With dangling nodes each round references the previous ranks TWICE
@@ -70,18 +67,13 @@ object PageRank {
     * single, the nest grows LINEARLY, and each skipped eager checkpoint
     * saves a full |V|-row materialize+store pass — cadence 8 keeps driver
     * heap bounded while typical contract runs (≤8 rounds) checkpoint never.
-    * `-Dgraft.graph.checkpointCadence=N` overrides both (the A/B probe's
-    * lever); read per iterate(), not cached.
+    * Measured a null result on time (TextRank at sf0.1: 7.13 s at cadence
+    * 3, 7.30 s at 8 — SCALE.md, "Checkpoint-cadence A/B on the linear
+    * nest"); kept because the geometric-nest guard only needs to fire on
+    * geometric nests.
     */
   def checkpointCadence(hasDangling: Boolean): Int =
-    sys.props.get("graft.graph.checkpointCadence").map(_.toInt)
-      .getOrElse(if (hasDangling) 3 else 8)
-
-  /** Broadcast-regime edge-table pre-partitioning by dst (see prepare()):
-    * on by default; `-Dgraft.graph.dstPartition=false` is the A/B lever.
-    */
-  def DstPartition: Boolean =
-    sys.props.get("graft.graph.dstPartition").forall(_.toBoolean)
+    if (hasDangling) 3 else 8
 
   /** Edge count at or below which the WHOLE iteration runs on the driver
     * (collect edges once, run the identical integer recurrence in-JVM,
@@ -97,8 +89,8 @@ object PageRank {
     * The probe is bounded (`limit(max+1).count()`), so big graphs pay one
     * early-stopping scan, not a full count. Default 2^21 edges (~32 MB of
     * (long, long) rows); `-Dgraft.graph.localEdgesMax=N` overrides, 0
-    * forces the distributed path (how the structural specs and A/B probes
-    * pin the regime they test).
+    * forces the distributed path (how the structural specs pin the regime
+    * they test).
     */
   def LocalEdgesMax: Long =
     sys.props.get("graft.graph.localEdgesMax").map(_.toLong)
@@ -302,12 +294,13 @@ object PageRank {
     // join output keeps eod's partitioning — pre-partitioning eod by dst
     // HERE (one exchange at prepare) lets every iteration's contrib
     // groupBy(dst) reuse it through the alias-aware Project: ZERO
-    // exchanges per iteration (GraphZeroExchangeAB measured the win). In
+    // exchanges per iteration (textrank at sf0.1: 6.43 → 5.33 s, SCALE.md
+    // "Zero-exchange broadcast iterations"). In
     // the shuffled regime iterations join BY SRC, so dst-partitioning
     // would force a re-exchange per round — left as-is there.
     val eodBase = e.join(outdeg, "src")
     val eod = Managed.ensurePersisted(
-      if (small && DstPartition) eodBase.repartition(col("dst")) else eodBase, lvl)
+      if (small) eodBase.repartition(col("dst")) else eodBase, lvl)
     val r0 = nodes
       .select(col("node"), col("is_seed"),
         when(col("is_seed"), lit(Scale / nRecv)).otherwise(lit(0L)).as("rank"))
@@ -361,8 +354,9 @@ object PageRank {
   }
 
   /** Gate + collect for the local fast paths: a bounded COUNT probe
-    * (`limit(localMax+1).count()` — the exact job LocalGateProbe
-    * measures; early-stopping, no row transfer), then the collect only
+    * (`limit(localMax+1).count()` — early-stopping, no row transfer;
+    * 0.9–1.4 s warm on a 64M-edge frame, SCALE.md "Round 14: the graph
+    * tier's measured-size LOCAL fast path"), then the collect only
     * when the count qualifies (advice, round 14: the previous
     * collect-first gate pulled up to localMax+1 boxed Rows to the driver
     * per invocation on graphs ABOVE the threshold — ~2M GenericRows at
@@ -528,7 +522,7 @@ object PageRank {
     // dangling-aware lineage-truncation cadence — see [[checkpointCadence]]:
     // geometric nest (two rank references per round) cuts every 3, linear
     // nest (no dangling stage) every 8; each skipped cut saves an eager
-    // |V|-row materialize+store pass (TextRankCadenceAB measured the win)
+    // |V|-row materialize+store pass
     val cadence = checkpointCadence(ctx.hasDangling)
     var ranks = ctx.r0
     var prev: Option[DataFrame] = None

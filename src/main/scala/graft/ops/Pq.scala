@@ -86,7 +86,7 @@ object Pq {
     * Lowered 64 → 32 in the round-19 optimization pass: at the bench
     * shape m=4, k=16 (64 terms) the unrolled form was measured 3–5×
     * SLOWER end-to-end than the kernels on the adcTopK pipeline
-    * (tools/PqAblateProbe at sf0.1: join+score 1.00 s unrolled vs 0.21 s
+    * (OPTIMIZATION_r19.md at sf0.1: join+score 1.00 s unrolled vs 0.21 s
     * kernel; full query 1.26 s vs 0.44 s). Two compounding causes, both
     * absent in the kernels: the 64-term tree is re-instantiated under
     * every consumer (the `!array_contains(codes, -1)` guard filter
@@ -168,8 +168,8 @@ object Pq {
     * [[graft.functions.PqExpressions.pq_adc]] kernel (round 15: the A/B
     * at both the bench shape m=4,k=16 and the production shape m=16,
     * k=256 measured the kernel 15-25% faster than the unrolled
-    * element_at chain on the full scoring scan — tools/PqAdcAB — with
-    * bit-identical values, PqSpec-asserted).
+    * element_at chain on the full scoring scan — SCALE.md round-15 table —
+    * with bit-identical values, PqSpec-asserted).
     */
   def adcScoreExpr(lut: Column, codes: Column, cb: Codebook): Column =
     graft.functions.PqExpressions.pq_adc(lut, codes, cb.k)
@@ -276,7 +276,8 @@ object Pq {
     * [[saveCodebook]]/[[Ivf.saveModel]]) and serve queries through
     * [[ivfAdcTopKIndexed]] — the deployment shape that amortizes the
     * assign+encode pass across every query (round-16 verdict item 4;
-    * `tools/PqWarmAB` measures the split).
+    * 2.5–3.2× warm over the cold shapes, SCALE.md "Round-17: the PQ/IVF
+    * saved-model warm path").
     */
   def buildIvfIndex(candidates: DataFrame, candIdCol: String, vecCol: String,
                     model: Ivf.Model, cb: Codebook): DataFrame =
@@ -318,7 +319,7 @@ object Pq {
     * for the shortlist + `shortlist` exact dots — the full-precision pass
     * touches `shortlist / |candidates|` of the data. Recall converges to
     * brute force as `shortlist` grows (PqSpec locks exact equality at
-    * shortlist ≥ |candidates|−1; `tools/PqRecall` measures the ladder).
+    * shortlist ≥ |candidates|−1; SCALE.md "PQ recall ladder" records it).
     */
   def adcRerankTopK(queries: DataFrame, candidates: DataFrame,
                     queryIdCol: String, vecCol: String, candIdCol: String,
@@ -331,7 +332,8 @@ object Pq {
   /** [[adcRerankTopK]] over a pre-built code table ([[encode]] output,
     * persisted once) — the warm query path: the compressed shortlist scan
     * reads codes at rest, the exact re-score pulls only the shortlisted
-    * full vectors (round-16 verdict item 4; `tools/PqWarmAB`).
+    * full vectors (round-16 verdict item 4; SCALE.md "Round-17: the PQ/IVF
+    * saved-model warm path").
     */
   def adcRerankTopKEncoded(queries: DataFrame, candidates: DataFrame,
                            codes: DataFrame, queryIdCol: String,
@@ -458,8 +460,8 @@ object Pq {
     * is one exact dot against the probed centroid per (query, probe), and
     * the LUT is over the RAW query (no residual needed on the query
     * side). Same pruning, same per-candidate cost as [[ivfAdcTopK]];
-    * strictly better use of the same m codes (`tools/PqRecall` measures
-    * the gap).
+    * strictly better use of the same m codes (SCALE.md "Residual IVF-PQ"
+    * records the measured gap).
     */
   def ivfAdcResidualTopK(queries: DataFrame, candidates: DataFrame,
                          queryIdCol: String, vecCol: String,

@@ -251,7 +251,8 @@ object Profiler {
     // scan+explode). The local sort after the aggregate restores value
     // order within each partition.
     //
-    // Round-20 A/B (tools/QuantProbe, warm minima over 5 reps at sf0.1):
+    // Round-20 A/B (warm minima over 5 reps at sf0.1, OPTIMIZATION_r20.md
+    // "VERDICT #1"):
     // this form 1.60 s; hash-agg-first + persist + range over the
     // aggregate (the round-19 verdict's candidate) 1.82 s — the distinct
     // table is 583 k of 1.8 M exploded rows (l_extendedprice is

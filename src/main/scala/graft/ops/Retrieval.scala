@@ -124,7 +124,7 @@ object Retrieval {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     // memoized resolution (round-20): the index is write-once per (JVM,
     // corpus dir) — re-resolving the two relations cost ~90 ms of driver
-    // time per query build (tools/ReadCostProbe)
+    // time per query build (OPTIMIZATION_r20.md, "Table resolution memo")
     val statsDf = graft.io.Sources.pathTable(spark, s"$indexDir/stats")
     val tf = graft.io.Sources.pathTable(spark, s"$indexDir/postings")
       .filter(col("token").isInCollection(terms))

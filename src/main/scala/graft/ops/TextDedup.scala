@@ -619,7 +619,8 @@ object TextDedup {
     * square of the pile; overhead is a few fixed joins), so overall dup
     * RATIO is the wrong predicate: a 10k-copy pile inside a 10M-doc
     * corpus is 0.1% dups and still a 10⁸-candidate prefix join. Measured
-    * crossover (SkewBench ngram, 5000-doc base): collapse ~2× slower at a
+    * crossover (ngram pile bench, 5000-doc base, SCALE.md "Exact-operator
+    * pile safety"): collapse ~2× slower at a
     * 2k pile, break-even ~4-8k, 10× faster at 16k and growing
     * quadratically — 4096 sits below every size where the win matters
     * and above the sizes where the overhead shows.

@@ -113,7 +113,8 @@ object CorpusPrepStream {
       // slot — recovers the single-slot banding misses that dominate at
       // low pair Jaccard (fixture recall 0.86→1.00 / 0.66→0.86 at the
       // J≈0.57/0.49 bands), for ~1.5× of this ONE stage's cost
-      // (PrepStreamBench `mp` mode; the tag is a minority of the
+      // (SCALE.md "Round 19: multi-probe streaming LSH tag"; the tag is a
+      // minority of the
       // pipeline). Off by default: the drop SET can only grow, and a
       // curation deployment should opt into stricter dropping explicitly.
       lshMultiProbe: Boolean = false,
@@ -282,8 +283,8 @@ object CorpusPrepStream {
     * checkpoints the expensive stage frontiers (novel, clean) so the audit
     * counts and downstream stages read each frontier once instead of
     * re-running the dedup probe and the decontamination explode-join per
-    * consumer (measured ~4× recompute per micro-batch in PrepStreamBench
-    * before this).
+    * consumer (measured ~4× recompute per micro-batch before this, SCALE.md
+    * "Streaming corpus-prep tier").
     *
     * `preparedBenchShingles`: pass [[graft.ops.Decontaminate.prepareBenchmark]]
     * output (persisted) when calling repeatedly — the benchmark is static,

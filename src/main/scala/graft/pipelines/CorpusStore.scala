@@ -178,7 +178,7 @@ object CorpusStore {
     * brief cold window (the swap call itself re-materializes before
     * returning), which is the correct trade against serving a stale
     * snapshot forever. StoreDurabilitySpec drives ingest → refresh → tag
-    * on the round trip; UnifiedDemo uses it between the tiers.
+    * on the round trip.
     */
   def refreshServedIndex(spark: SparkSession, dir: String, idCol: String,
                          previous: Option[LshStream.ServedIndex],

@@ -38,7 +38,8 @@ private[queries] trait QextDedupTier { this: QextBase =>
     })
     // memoized resolution (round-20): the store is write-once per (JVM,
     // dir) by the computeIfAbsent above — re-resolving cost ~90 ms of
-    // driver time per query build (tools/ReadCostProbe)
+    // driver time per query build (OPTIMIZATION_r20.md, "Table resolution
+    // memo")
     graft.io.Sources.pathTable(spark, path)
   }
 

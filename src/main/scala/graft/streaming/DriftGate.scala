@@ -12,11 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * the verdicts are arithmetic over the collected row against reference
   * snapshots gathered ONCE per query.
   *
-  * Why: the r18 fused-healthy-path measurement (PrepStreamBench `drift`
-  * mode) showed the gate's residual ~2.3 s per healthy batch was per-rule
-  * DAG depth — three aggregation subtrees plus a union materialization and
-  * a count, each a driver-scheduled job — while the data volume (one
-  * micro-batch) was noise. One job, one collected row, driver arithmetic.
+  * Why: the r18 fused-healthy-path measurement (SCALE.md "Round-18
+  * continuation: gate cost measured, fused") showed the gate's residual
+  * ~2.3 s per healthy batch was per-rule DAG depth — three aggregation
+  * subtrees plus a union materialization and a count, each a
+  * driver-scheduled job — while the data volume (one micro-batch) was
+  * noise. One job, one collected row, driver arithmetic.
   *
   * Exactness: every aggregate is the SAME expression the per-rule
   * DataFrame forms use — `approx_count_distinct` for distincts,

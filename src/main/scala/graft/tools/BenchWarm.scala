@@ -9,13 +9,14 @@ import graft.ops.{Ivf, Pq}
   * saved parquet forms, codes and the IVF index read at rest, queries
   * served via the `*Indexed`/`*Encoded` entry points — timed every close
   * and gated no-worse-than-2×-of-prior-round by `scripts/close_gate.py`.
-  * `tools/PqWarmAB` measured this once (2.5–3.2× over the registry's
-  * cold shapes); without a per-round artifact a regression in
+  * An A/B measured this once (2.5–3.2× over the registry's cold shapes,
+  * SCALE.md "Round-17: the PQ/IVF saved-model warm path"; the A/B main is
+  * in git at ac4574e); without a per-round artifact a regression in
   * [[graft.ops.Pq.buildIvfIndex]] / [[graft.ops.Pq.ivfAdcRerankTopKIndexed]]
   * would be invisible — the registry queries deliberately keep the cold,
   * oracle-portable shapes.
   *
-  * Parameters are FIXED (the PqWarmAB set: 16 fixed quantizer ids, m=4,
+  * Parameters are FIXED (that A/B's set: 16 fixed quantizer ids, m=4,
   * nprobe=4, topK=5, shortlist=50) so the numbers are comparable
   * round-over-round; timing is min-of-`passes` after one warmup, the
   * engine's standard floor estimate on this weather-prone host.

@@ -2,19 +2,18 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local-session builder for the dev harnesses (Smoke, demos, Explain,
-  * TimeOne, Profile) — one place for the UTC/nanosAsLong/partition settings
-  * instead of seven copies.
+/** Shared local-session builder for the dev mains (Smoke, PipelineDemo,
+  * Explain, TimeOne, SchemaDump, ScaleGen, WriteAudit, BenchWarm,
+  * RecallReport, PqClusteredRecall, TwsProbe) and perfbench's harness —
+  * one place for the UTC/nanosAsLong/partition settings.
   */
 object LocalSession {
   def apply(cores: Int = 4, logLevel: String = "WARN"): SparkSession = {
-    // SPARK_GRAFT_SHUFFLE overrides shuffle parallelism for scale
-    // experiments (default: one partition per core — right for the test
-    // scale factors; raise with data volume, see SCALE.md 100x notes)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cores.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", shuffle)
+      // one shuffle partition per core: right for the test scale factors
+      // (SCALE.md, "Shuffle-parallelism sweep at 100×", for larger data)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -22,7 +21,8 @@ object LocalSession {
       // misra_gries) have BOUNDED per-group buffers by design, so the
       // ObjectHashAggregate sort-based fallback (default: 128 distinct
       // keys per task!) only costs — measured 5.4s -> 0.5s on the
-      // 100x top-k-per-group (tools/FallbackProbe, SCALE.md round 10).
+      // 100x top-k-per-group (SCALE.md round 10, "ObjectHashAggregate
+      // sort-based fallback").
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "131072")
       .getOrCreate()

@@ -1,4 +1,9 @@
 package graft.tools
+
+/** Prints the sf0.01 testdata table schemas in the literal form of
+  * `TestdataDriftSpec`'s baseline map, to regenerate it after a deliberate
+  * testdata change. Usage: `sbt "runMain graft.tools.SchemaDump"`.
+  */
 object SchemaDump {
   def main(args: Array[String]): Unit = {
     val spark = LocalSession(cores = 2, logLevel = "ERROR")

@@ -1,9 +1,17 @@
 package graft.tools
+
+/** Per-query timer: one `count()` per named registry query (all of them
+  * when none is named) in one warm local[32] session, printing wall time
+  * and row count. A query that throws prints `rows=-1`.
+  *
+  * Usage: `sbt "runMain graft.tools.TimeOne <sfDir> [query ...] [-Dk=v ...]"`.
+  */
 object TimeOne {
   def main(args: Array[String]): Unit = {
     // -Dk=v args become system properties (sbt's `run` forks with fixed
     // javaOptions, so command-line -D flags don't otherwise reach the app —
-    // this is how ad-hoc runs pin regime levers like graft.graph.*)
+    // this is how ad-hoc runs pin regime levers like
+    // graft.graph.localEdgesMax)
     val (propArgs, rest) = args.partition(_.startsWith("-D"))
     propArgs.foreach { a =>
       val kv = a.stripPrefix("-D").split("=", 2)

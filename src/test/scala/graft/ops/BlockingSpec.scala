@@ -97,7 +97,8 @@ class BlockingSpec extends SparkSpec {
 
   it should "be a pair-set no-op on the real documents corpus" in {
     // every block on the oracle corpus sits far below the auto floor
-    // (BucketProbe: minhash max 3-4, sf0.01/0.1), so default-on auto must
+    // (minhash max 3-4 at sf0.01/0.1, SCALE.md "Auto hot-bucket cap"), so
+    // default-on auto must
     // emit the EXACT uncapped pair set — the property the DuckDB oracle
     // relies on (q_ext_dedup_minhash/simhash unchanged under the default)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -260,8 +260,9 @@ class PqSpec extends SparkSpec {
     codes.foreach(_.getSeq[Int](1).foreach(c => c should (be >= 0 and be < 2)))
   }
   "the native pq_adc kernel" should "be BIT-identical to the unrolled element_at chain" in {
-    // the hot path routes through the kernel (round 15 — tools/PqAdcAB
-    // measured it 15-25% faster at both bench and production shapes);
+    // the hot path routes through the kernel (round 15 — an A/B measured
+    // it 15-25% faster at both bench and production shapes, SCALE.md
+    // round-15 table, q_ext_pq_adc row);
     // this identity is what keeps the DuckDB ADC oracles valid for it.
     // Deterministic pseudo-random vectors, both a small (m=2, k=2) and a
     // production-shaped (m=16, k=256) codebook.
@@ -291,7 +292,8 @@ class PqSpec extends SparkSpec {
 
   "the UnrollMaxTerms switch" should "route the bench codebook shape (m=4, k=16) through the native kernels" in {
     // round-19 optimization: at m·k = 64 the unrolled literal form measured
-    // 3-5x slower end-to-end than the kernels (tools/PqAblateProbe — the
+    // 3-5x slower end-to-end than the kernels (OPTIMIZATION_r19.md, "PQ
+    // family" — the
     // 64-term tree is duplicated under the codes guard filter and its
     // generated Java blows past JIT-friendly method sizes), so the switch
     // must keep 64 terms on the kernel path; tiny codebooks stay unrolled.

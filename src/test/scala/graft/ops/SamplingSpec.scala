@@ -128,8 +128,9 @@ class SamplingSpec extends SparkSpec {
   }
 
   it should "handle the driver shape 10^4 partitions x 10^2 groups linearly" in {
-    // 10^6 entries in-spec (the full 10^7 shape is measured by
-    // tools/OffsetsProbe); the quadratic form would be ~10^12 comparisons
+    // 10^6 entries in-spec (the full 10^7 shape is measured in SCALE.md,
+    // "Round 16: the per-group sampling offsets, de-quadratified"); the
+    // quadratic form would be ~10^12 comparisons
     val entries = Array.tabulate(1000000) { i =>
       (i % 10000, s"g${i / 10000}", (i % 97).toLong)
     }
