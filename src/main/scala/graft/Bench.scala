@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The §2.12 reference-parity registry — the FIXED query mix behind
@@ -226,19 +225,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded-buffer typed aggregates: avoid the 128-key
-      // ObjectHashAggregate sort fallback (SCALE.md round-10 probe)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.tools.LocalSession(cores = cpus)
     def loadAvg(): Double =
       try java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
@@ -362,9 +350,9 @@ object Bench {
     val runsLog = java.nio.file.Paths.get("BENCH_RUNS.jsonl")
     val head = gitHead()
     val (histFloors, mergedRuns) =
-      head.map(sameHeadFloors(_, sfDir, cpus.toInt, runsLog))
+      head.map(sameHeadFloors(_, sfDir, cpus, runsLog))
         .getOrElse((Map.empty[String, Double], 0))
-    appendRunLog(runsLog, head, sfDir, cpus.toInt, inRunResults, inRunTotal,
+    appendRunLog(runsLog, head, sfDir, cpus, inRunResults, inRunTotal,
       loadIdle, allPasses.size)
     val results =
       if (mergedRuns > 0)

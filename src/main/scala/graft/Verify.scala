@@ -1,29 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generator drift guard: events.ts has been INT64 epoch-nanos (rounds
-      // 1-8; Spark rejects TIMESTAMP(NANOS) without nanosAsLong) and
-      // TIMESTAMP_MICROS (round 9+; nanosAsLong is then inert). Keep the
-      // config AND read adaptively (graft.io.Sources.eventTs inspects the
-      // arrived type) so either generator output analyzes.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded-buffer typed aggregates: avoid the 128-key
-      // ObjectHashAggregate sort fallback (SCALE.md round-10 probe)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.LocalSession(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // A failed query must be LOUD: round 9 lost 5 queries silently because a
     // stderr line was the only signal and the driver's correctness JSON just

@@ -68,7 +68,7 @@ object Sources {
     * Both directions are handled so a generator change can never again break
     * analysis silently. The NTZ→timestamp cast interprets the wall clock in
     * the session time zone — every engine session pins
-    * `spark.sql.session.timeZone=UTC` (Verify/Bench/LocalSession/SparkSpec),
+    * `spark.sql.session.timeZone=UTC` (`graft.tools.LocalSession`),
     * which matches the DuckDB oracle's `epoch_ns(ts)` view of the same file.
     */
   def eventTsMicros(df: DataFrame, colName: String = "ts"): org.apache.spark.sql.Column =

@@ -105,9 +105,13 @@ object Sampling {
     systematicWeightedManaged(df, idCol, weightCol, k).df
 
   /** [[systematicWeighted]] with cache-lifecycle control. The sorted frame
-    * MUST stay persisted until the result is consumed: pass 2's offsets are
-    * keyed by the partition ids pass 1 observed, and an unpersisted
-    * recompute could re-sample different range boundaries.
+    * carries its own partition index (`__pid`, stamped before it is
+    * persisted), and both passes key their offsets by that column, not by
+    * the running task's partition id: a coalesce above the operator (a
+    * single-file sink, a one-task root sort) runs pass 2 over several
+    * stored partitions in one task. The sorted frame MUST stay persisted
+    * until the result is consumed: an unpersisted recompute could
+    * re-sample different range boundaries.
     */
   def systematicWeightedManaged(df: DataFrame, idCol: String,
                                 weightCol: String, k: Long): Managed = {
@@ -118,17 +122,18 @@ object Sampling {
       .select(col(idCol).cast("long").as("__id"), col(weightCol).cast("long").as("__w"))
       .repartitionByRange(col("__id"))
       .sortWithinPartitions("__id")
-      .as[(Long, Long)]
+      .withColumn("__pid", spark_partition_id())
+      .as[(Long, Long, Int)]
       .transform(Managed.ensurePersisted(_,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // pass 1: one (partitionId, sum) pair per partition
+    // pass 1: one (__pid, sum) pair per stored partition
     val partTotals = sorted.mapPartitions { it =>
-      var s = 0L
-      it.foreach { case (_, w) =>
+      val sums = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
+      it.foreach { case (_, w, pid) =>
         require(w >= 0, s"negative weight $w")
-        s = Math.addExact(s, w)
+        sums(pid) = Math.addExact(sums.getOrElse(pid, 0L), w)
       }
-      Iterator.single(org.apache.spark.TaskContext.getPartitionId() -> s)
+      sums.iterator
     }.collect().sortBy(_._1)
     val total = partTotals.map(_._2).sum
     val result =
@@ -140,8 +145,10 @@ object Sampling {
         val bigK = BigInt(k); val bigW = BigInt(total)
         // pass 2: walk each partition from its exclusive offset
         sorted.mapPartitions { it =>
-          var cum = offsets(org.apache.spark.TaskContext.getPartitionId())
-          it.flatMap { case (id, w) =>
+          var curPid = -1
+          var cum = 0L
+          it.flatMap { case (id, w, pid) =>
+            if (pid != curPid) { curPid = pid; cum = offsets(pid) }
             val lo = BigInt(cum) * bigK / bigW
             cum += w
             val copies = (BigInt(cum) * bigK / bigW - lo).toLong
@@ -210,7 +217,7 @@ object Sampling {
   }
 
   /** [[systematicWeightedPerGroup]] with cache-lifecycle control (same
-    * persistence requirement as the global form).
+    * `__pid` keying and persistence requirement as the global form).
     */
   def systematicWeightedPerGroupManaged(df: DataFrame, groupCol: String,
                                         idCol: String, weightCol: String,
@@ -224,20 +231,20 @@ object Sampling {
         col(weightCol).cast("long").as("__w"))
       .repartitionByRange(col("__g"), col("__id"))
       .sortWithinPartitions("__g", "__id")
-      .as[(String, Long, Long)]
+      .withColumn("__pid", spark_partition_id())
+      .as[(String, Long, Long, Int)]
       .transform(Managed.ensurePersisted(_,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // pass 1: per-(partition, group) sums — groups are contiguous within
+    // pass 1: per-(__pid, group) sums — groups are contiguous within
     // a sorted partition, so this is a streaming fold
     val partTotals = sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val sums = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { case (g, _, w) =>
+      val sums = scala.collection.mutable.LinkedHashMap.empty[(Int, String), Long]
+      it.foreach { case (g, _, w, pid) =>
         require(g != null, "null group in systematicWeightedPerGroup")
         require(w >= 0, s"negative weight $w")
-        sums(g) = Math.addExact(sums.getOrElse(g, 0L), w)
+        sums((pid, g)) = Math.addExact(sums.getOrElse((pid, g), 0L), w)
       }
-      sums.iterator.map { case (g, s) => (pid, g, s) }
+      sums.iterator.map { case ((pid, g), s) => (pid, g, s) }
     }.collect()
     val totals = partTotals.groupBy(_._2)
       .map { case (g, xs) => g -> xs.map(_._3).sum }
@@ -245,11 +252,13 @@ object Sampling {
     val ks = totals.keys.map(g =>
       g -> kByGroup.getOrElse(g, defaultK)).toMap
     val result = sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
+      var curPid = -1
       var curG: String = null
       var cum = 0L
-      it.flatMap { case (g, id, w) =>
-        if (g != curG) { curG = g; cum = offsets((pid, g)) }
+      it.flatMap { case (g, id, w, pid) =>
+        if (pid != curPid || g != curG) {
+          curPid = pid; curG = g; cum = offsets((pid, g))
+        }
         val kg = ks(g); val wg = totals(g)
         if (kg <= 0 || wg == 0) { cum += w; Iterator.empty }
         else {

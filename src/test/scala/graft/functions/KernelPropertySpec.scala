@@ -38,19 +38,6 @@ class KernelPropertySpec extends SparkSpec {
   private def sample[T](g: Gen[T], n: Int): Seq[T] =
     Iterator.continually(g.sample).flatten.take(n).toSeq
 
-  /** Run `body` with the given SQL confs, restoring previous values. Safe
-    * on the shared session: sbt forks one test JVM and runs suites
-    * sequentially (`Test / fork := true`, default non-parallel fork).
-    */
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   private def interpreted[T](body: => T): T =
     withConfs("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)

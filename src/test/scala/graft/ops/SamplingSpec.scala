@@ -159,4 +159,29 @@ class SamplingSpec extends SparkSpec {
     a.filter(_._1 == "g0").map(_._4).sum shouldBe 7L
     a.filter(_._1 == "g2").map(_._4).sum shouldBe 5L
   }
+
+  "systematicWeighted and systematicWeightedPerGroup" should
+    "give the same rows plain, under coalesce(1) and through a single-file sink" in {
+    val docs = (1L to 2000L).map(i => (s"l${i % 3}", i, i % 13 + 1))
+      .toDF("lang", "doc_id", "n_chars").repartition(5)
+    def three(out: => org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
+      def lines(rows: Array[org.apache.spark.sql.Row]) =
+        rows.map(_.toSeq.map(String.valueOf).mkString(",")).sorted.toSeq
+      val dir = java.nio.file.Files.createTempDirectory("sampling-sink")
+      try {
+        graft.io.Sinks.singleCsv(out, dir.toString)
+        Seq(lines(out.collect()), lines(out.coalesce(1).collect()),
+          lines(spark.read.option("header", "true").csv(dir.toString).collect()))
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+    val global = three(Sampling.systematicWeighted(docs, "doc_id", "n_chars", k = 100))
+    global(0).map(_.split(",")(2).toLong).sum shouldBe 100L
+    global(1) shouldBe global(0)
+    global(2) shouldBe global(0)
+    val grouped = three(Sampling.systematicWeightedPerGroup(docs, "lang", "doc_id",
+      "n_chars", kByGroup = Map.empty, defaultK = 20L))
+    grouped(0).map(_.split(",")(3).toLong).sum shouldBe 60L
+    grouped(1) shouldBe grouped(0)
+    grouped(2) shouldBe grouped(0)
+  }
 }

@@ -30,6 +30,26 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  it should "return the same rows in the same order without the one-task sort" in {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+    val installed = spark.experimental.extraOptimizations
+    def off[T](body: => T): T = {
+      spark.experimental.extraOptimizations = installed.filterNot(_ == graft.OneTaskSort)
+      try body finally spark.experimental.extraOptimizations = installed
+    }
+    val fired = graft.SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val on = fn(spark, dir)
+      val rows = on.collect()
+      withClue(s"$name: ") { rows.toSeq shouldBe off(fn(spark, dir).collect()).toSeq }
+      on.queryExecution.optimizedPlan.exists {
+        case Sort(_, true, Repartition(1, false, _), _) => true
+        case _ => false
+      }
+    }
+    // most of the registry ends in a small root sort
+    fired.count(identity) should be > graft.SparkEntry.queries.size / 2
+  }
+
   "oracleSql" should "only name declared queries and cover the SQL-expressible ones" in {
     val qs = graft.SparkEntry.queries.keySet
     val orphans = graft.SparkEntry.oracleSql.keySet.diff(qs)
